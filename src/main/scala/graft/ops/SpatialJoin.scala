@@ -71,29 +71,29 @@ object SpatialJoin {
       .withColumn("__qcell", explode(array(ancestorCols: _*)))
       .drop("__fcell")
 
-    val doBroadcast = broadcastPolys.getOrElse {
-      // plan-statistics cost probe — no job launched when stats are real
-      // (the reference's cost-based strategy choice,
-      // QueryStrategyDecider.scala:52-110, reads cardinality metadata the
-      // same way). Covers multiply rows by at most `budget`; ~budget/4 is
-      // the observed typical budget-capped cover size.
-      val coverFactor = math.max(1, budget / 4)
-      val conf = polys.sparkSession.sessionState.conf
-      val bytes = polys.queryExecution.optimizedPlan.stats.sizeInBytes
-      if (bytes < BigInt(conf.defaultSizeInBytes))
-        bytes * coverFactor <= BigInt(256L * 1024 * 1024)
-      else {
-        // stats are the unknown-size sentinel (LocalRelation, post-join
-        // frames): a HUGE default would force the salted-shuffle path plus
-        // a hot-cell sampling job for what is often a tiny build side.
-        // Bounded row probe instead: scans at most maxRows+1 build rows.
-        val maxRows = BroadcastCoverRows / coverFactor
-        polys.limit((maxRows + 1).toInt).count() <= maxRows
-      }
-    }
+    coverJoin(polyCells, pointCells, pmod(hash(pointGeom), lit(salts)), refine,
+      broadcastPolys.getOrElse(coverFitsBroadcast(polys, budget)), salts, knownHotCells)
+  }
 
-    coverJoin(polyCells, pointCells, pmod(hash(pointGeom), lit(salts)),
-      refine, doBroadcast, salts, knownHotCells)
+  /** Broadcast the cover side? A plan-statistics cost probe — no job
+    * launched when stats are real (the reference's cost-based strategy
+    * choice, QueryStrategyDecider.scala:52-110, reads cardinality metadata
+    * the same way). Covers multiply rows by at most `budget`; ~budget/4 is
+    * the observed typical budget-capped cover size. */
+  private def coverFitsBroadcast(polys: DataFrame, budget: Int): Boolean = {
+    val coverFactor = math.max(1, budget / 4).toLong
+    val conf = polys.sparkSession.sessionState.conf
+    val bytes = polys.queryExecution.optimizedPlan.stats.sizeInBytes
+    if (bytes < BigInt(conf.defaultSizeInBytes))
+      bytes * coverFactor <= BigInt(256L * 1024 * 1024)
+    else {
+      // stats are the unknown-size sentinel (LocalRelation, post-join
+      // frames): a HUGE default would force the salted-shuffle path plus
+      // a hot-cell sampling job for what is often a tiny build side.
+      // Bounded row probe instead: scans at most maxRows+1 build rows.
+      val maxRows = BroadcastCoverRows / coverFactor
+      polys.limit((maxRows + 1).toInt).count() <= maxRows
+    }
   }
 
   /** Build sides below this estimated size skip the spread entirely: the
@@ -126,7 +126,7 @@ object SpatialJoin {
   }
 
   /**
-   * The strategy core shared by every cell family (Z2 ladder, S2): build
+   * The strategy core shared by every cell family (Z2, S2, hex): build
    * side carries exploded cover cells in `__pcell`, probe side its cell(s)
    * in `__qcell`. Broadcast when decided; otherwise shuffle both sides on
    * the cell key with explicit hot-cell salting (north rule: skew handled
@@ -135,29 +135,50 @@ object SpatialJoin {
    * salts, hot probe rows scatter by `probeSalt`. Production hot cells
    * come from write-time statistics (CellLayout.hotCellsFromManifest); the
    * sampling job is the fallback for ad-hoc inputs.
+   *
+   * The salt is packed into the cell key ([[saltedKey]]), as the reference
+   * packs its shard and cell into one row key (IndexSchema.scala:33-67), so
+   * both sides join on one exact `LongType` key, as the broadcast branch
+   * does. One long sort key is decided by the 8-byte sort prefix alone: the
+   * sort-merge join's sorts take the radix sort and never compare rows. A
+   * (cell, salt) key pair would put only the cell in the prefix, and every
+   * row of a hot cell would tie on it and fall through to row comparisons.
    */
   private[graft] def coverJoin(
       buildCells: DataFrame, probeCells: DataFrame, probeSalt: Column,
       refine: DataFrame => Column, doBroadcast: Boolean, salts: Int,
       knownHotCells: Option[Array[Long]]): DataFrame = {
-    if (doBroadcast || salts <= 1) {
+    val joined = if (doBroadcast || salts <= 1) {
       // broadcast join: the big side never shuffles, hot cells are a
       // non-issue (every task probes the same hash table)
       val buildSide = if (doBroadcast) broadcast(buildCells) else buildCells
-      val joined = probeCells.join(buildSide, col("__qcell") === col("__pcell"), "inner")
-      joined.filter(refine(joined)).drop("__pcell", "__qcell")
+      probeCells.join(buildSide, col("__qcell") === col("__pcell"), "inner")
     } else {
       val hot = knownHotCells.getOrElse(hotCells(probeCells, col("__qcell"), salts))
       val hotLit = typedLit(hot.toSeq)
       val saltedBuild = buildCells.withColumn("__psalt",
-        explode(when(array_contains(hotLit, col("__pcell")),
-          sequence(lit(0), lit(salts - 1))).otherwise(array(lit(0)))))
-      val saltedProbe = probeCells.withColumn("__qsalt",
-        when(array_contains(hotLit, col("__qcell")), probeSalt).otherwise(lit(0)))
-      val joined = saltedProbe.join(saltedBuild,
-        col("__qcell") === col("__pcell") && col("__qsalt") === col("__psalt"), "inner")
-      joined.filter(refine(joined)).drop("__pcell", "__qcell", "__psalt", "__qsalt")
+          explode(when(array_contains(hotLit, col("__pcell")),
+            sequence(lit(0), lit(salts - 1))).otherwise(array(lit(0)))))
+        .withColumn("__pcell", saltedKey(hotLit, col("__pcell"), col("__psalt"), salts))
+      // `__qsalt` is no join key: it stays in the plan as the readable
+      // record of the salting choice and hot-cell list (the optimizer
+      // prunes it before execution)
+      val saltedProbe = probeCells.withColumns(Map(
+        "__qsalt" -> when(array_contains(hotLit, col("__qcell")), probeSalt).otherwise(lit(0)),
+        "__qcell" -> saltedKey(hotLit, col("__qcell"), probeSalt, salts)))
+      saltedProbe.join(saltedBuild, col("__qcell") === col("__pcell"), "inner")
     }
+    joined.filter(refine(joined)).drop("__pcell", "__qcell", "__psalt", "__qsalt")
+  }
+
+  /** Join key of a cell on the salted path: a cold cell keeps its id; a hot
+    * cell at 1-based position `p` of `hotCells` with salt `s` in
+    * [0, salts) becomes `-(p * salts + s)`. Cell ids are ≥ 0, so a salted
+    * key never meets a cold cell, and each (p, s) has its own key: a pair
+    * still matches on exactly one key, with no dedupe. */
+  private[graft] def saltedKey(hotCells: Column, cell: Column, salt: Column, salts: Int): Column = {
+    val p = array_position(hotCells, cell)
+    when(p > 0, -(p * salts + salt)).otherwise(cell)
   }
 
   /** S2 ladder levels for [[containsJoinS2]]: each polygon covers at the
@@ -196,23 +217,10 @@ object SpatialJoin {
     val pointCells = withFinest
       .withColumn("__qcell", explode(array(ancestorCols: _*)))
       .drop("__fcell")
-    val doBroadcast = broadcastPolys.getOrElse {
-      // same plan-statistics probe as the Z2 path; the cover multiplies
-      // build rows by at most `budget` (~budget/4 typical, like Z2)
-      val coverFactor = math.max(1, budget / 4).toLong
-      val conf = polys.sparkSession.sessionState.conf
-      val bytes = polys.queryExecution.optimizedPlan.stats.sizeInBytes
-      if (bytes < BigInt(conf.defaultSizeInBytes))
-        bytes * coverFactor <= BigInt(256L * 1024 * 1024)
-      else {
-        val maxRows = BroadcastCoverRows / coverFactor
-        polys.limit((maxRows + 1).toInt).count() <= maxRows
-      }
-    }
     coverJoin(polyCells, pointCells,
       pmod(hash(col(lonName), col(latName)), lit(salts)),
       df => st.contains(df(polyGeomName), st.point(df(lonName), df(latName))),
-      doBroadcast, salts, knownHotCells)
+      broadcastPolys.getOrElse(coverFitsBroadcast(polys, budget)), salts, knownHotCells)
   }
 
   /** Hex ladder resolutions for [[containsJoinHex]] (circumradius 4° → 0.25°). */
@@ -246,21 +254,10 @@ object SpatialJoin {
       lit(budget), typedLit(levels))))
     val pointCells = points.withColumn("__qcell", explode(array(
       levels.map(l => st.hexEncode(col(lonName), col(latName), lit(l))): _*)))
-    val doBroadcast = broadcastPolys.getOrElse {
-      val coverFactor = math.max(1, budget / 4).toLong
-      val conf = polys.sparkSession.sessionState.conf
-      val bytes = polys.queryExecution.optimizedPlan.stats.sizeInBytes
-      if (bytes < BigInt(conf.defaultSizeInBytes))
-        bytes * coverFactor <= BigInt(256L * 1024 * 1024)
-      else {
-        val maxRows = BroadcastCoverRows / coverFactor
-        polys.limit((maxRows + 1).toInt).count() <= maxRows
-      }
-    }
     coverJoin(polyCells, pointCells,
       pmod(hash(col(lonName), col(latName)), lit(salts)),
       df => st.contains(df(polyGeomName), st.point(df(lonName), df(latName))),
-      doBroadcast, salts, knownHotCells)
+      broadcastPolys.getOrElse(coverFitsBroadcast(polys, budget)), salts, knownHotCells)
   }
 
   /** Probe-side cell histogram → cells whose estimated row count exceeds

@@ -166,13 +166,25 @@ class HexLiteSpec extends SparkSpec {
       .join(polys, col("lon") > col("xmin") && col("lon") < col("xmax") &&
         col("lat") > col("ymin") && col("lat") < col("ymax"))
       .select("region_id", "doc_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    // the 5% sample finds no hot cell in the fixture's 500 sparse pages:
+    // take every occupied probe cell as hot, so every match goes through
+    // the salted branch's replicate and scatter
+    val levels = SpatialJoin.HexLevels
+    val hot = histogramHotCells(pts,
+      levels.toSeq.map(l => st.hexEncode(col("lon"), col("lat"), lit(l))), 0L)
+    assert(hot.nonEmpty)
+    assert(hot.map(HexLite.resOf).distinct.length >= 2, hot.toSeq)
+    val covers = polys.select(explode(st.hexCoverBudget(col("xmin"), col("ymin"), col("xmax"),
+      col("ymax"), lit(SpatialJoin.HexBudget), typedLit(levels))).as("c"))
+    assert(!covers.filter(col("c").isin(hot.toSeq: _*)).isEmpty, "no build row covers a hot cell")
     Seq(Some(true), Some(false)).foreach { bc =>
       val got = SpatialJoin.containsJoinHex(polys,
           "xmin", "ymin", "xmax", "ymax", "region_geom",
-          pts, "lon", "lat", broadcastPolys = bc)
+          pts, "lon", "lat", broadcastPolys = bc, knownHotCells = Some(hot))
         .select("region_id", "doc_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(got === expected, s"broadcast=$bc")
     }
+    assert(expected.nonEmpty)
   }
 
   test("hex SQL functions are registered") {

@@ -118,9 +118,22 @@ class S2LiteSpec extends SparkSpec {
     val bcast = pairs(graft.ops.SpatialJoin.containsJoinS2(
       regions, "xmin", "ymin", "xmax", "ymax", "region_geom",
       pts, "lon", "lat", broadcastPolys = Some(true)))
+    // the 5% sample finds no hot cell in the fixture's 500 sparse pages:
+    // take every occupied probe cell as hot, so every match goes through
+    // the salted branch's replicate and scatter
+    val levels = graft.ops.SpatialJoin.S2Levels
+    val finest = graft.functions.st.s2Encode(col("lon"), col("lat"), lit(levels.last))
+    val hot = histogramHotCells(pts,
+      levels.toSeq.map(l => graft.functions.st.s2Parent(finest, lit(l))), 0L)
+    assert(hot.nonEmpty)
+    assert(hot.map(S2Lite.levelOf).distinct.length >= 2, hot.toSeq)
+    val covers = regions.select(explode(graft.functions.st.s2CoverBudget(
+      col("xmin"), col("ymin"), col("xmax"), col("ymax"),
+      lit(graft.ops.SpatialJoin.S2Budget), typedLit(levels))).as("c"))
+    assert(!covers.filter(col("c").isin(hot.toSeq: _*)).isEmpty, "no build row covers a hot cell")
     val salted = pairs(graft.ops.SpatialJoin.containsJoinS2(
       regions, "xmin", "ymin", "xmax", "ymax", "region_geom",
-      pts, "lon", "lat", broadcastPolys = Some(false), salts = 4))
+      pts, "lon", "lat", broadcastPolys = Some(false), salts = 4, knownHotCells = Some(hot)))
     assert(bcast === expect)
     assert(salted === expect)
     assert(expect.nonEmpty)

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{array, col, explode}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -20,6 +21,13 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       case (k, None) => spark.conf.unset(k)
     }
   }
+
+  /** Cells holding more than `minRows` of `points`' probe cells (`cells`,
+    * one per ladder level), from a full histogram rather than the join's
+    * 5% sample: lets the sf0.001 fixture drive the salted join's hot path. */
+  def histogramHotCells(points: DataFrame, cells: Seq[Column], minRows: Long): Array[Long] =
+    points.select(explode(array(cells: _*)).as("c")).groupBy("c").count()
+      .filter(col("count") > minRows).select("c").collect().map(_.getLong(0))
 }
 
 object SparkSpec {

@@ -118,18 +118,29 @@ class SpatialJoinSpec extends SparkSpec {
   }
 
   test("salted shuffle path == broadcast path (skew handling preserves results)") {
+    import graft.functions.st
     val polys = WebPages.regions(spark, sfDir).select("region_id", "region_geom")
     val p = WebPages.pages(spark, sfDir).select("doc_id", "geom")
-    def run(salts: Int, bcast: Boolean) = {
-      val threshold = graft.ops.SpatialJoin.HotCellRows
+    // the 5% sample finds no hot cell in the fixture's 500 sparse pages:
+    // take every occupied probe cell as hot, so every match goes through
+    // the salted branch's replicate and scatter
+    val levels = SpatialJoin.DefaultLevels
+    val finest = st.cellOf(col("geom"), lit(levels.last))
+    val hot = histogramHotCells(p, levels.toSeq.map(r => st.cellParent(finest, lit(r))), 0L)
+    assert(hot.nonEmpty)
+    assert(hot.map(graft.index.Z2.resOf).distinct.length >= 2, hot.toSeq)
+    val covers = polys.select(explode(st.cellCoverBudget(col("region_geom"),
+      lit(SpatialJoin.DefaultBudget), typedLit(levels))).as("c"))
+    assert(!covers.filter(col("c").isin(hot.toSeq: _*)).isEmpty, "no build row covers a hot cell")
+    def run(salts: Int, bcast: Boolean, knownHot: Option[Array[Long]]) =
       SpatialJoin.polygonsWithPoints(
           polys, col("region_geom"), p, col("geom"),
-          df => graft.functions.st.contains(df("region_geom"), df("geom")),
-          broadcastPolys = Some(bcast), salts = salts)
+          df => st.contains(df("region_geom"), df("geom")),
+          broadcastPolys = Some(bcast), salts = salts, knownHotCells = knownHot)
         .select("region_id", "doc_id").collect().map(r => (asL(r, 0), asL(r, 1))).toSet
-    }
-    val reference = run(1, true)
-    assert(run(8, false) === reference)
+    val reference = run(1, true, None)
+    assert(reference.nonEmpty)
+    assert(run(8, false, Some(hot)) === reference)
   }
 
   test("bboxFilter wraps the antimeridian: xmin > xmax splits into two boxes") {
@@ -157,7 +168,6 @@ class SpatialJoinSpec extends SparkSpec {
     // with a low threshold the sample histogram must surface them
     val p = WebPages.pages(spark, sfDir)
       .withColumn("__qcell", graft.functions.st.cellOf(col("geom"), lit(5)))
-    val saved = graft.ops.SpatialJoin.HotCellRows
     val hot = p.sample(1.0, 42).groupBy("__qcell").count()
       .filter(col("count") > 20).select("__qcell").collect().map(_.getLong(0)).toSet
     assert(hot.nonEmpty, "expected hot cells from the city clusters")
