@@ -386,6 +386,20 @@ case class CellCoverBudget(first: Expression, second: Expression, third: Express
   override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression): Expression = copy(f, s, t)
 }
 
+/** cell_cover_level(geom, budget, levels) → the resolution
+  * cell_cover_budget covers `geom` at (the same [[GeomRT.coverRes]] choice). */
+case class CellCoverLevel(first: Expression, second: Expression, third: Expression)
+    extends TernaryExpression with Serializable {
+  override def dataType: DataType = IntegerType
+  override def nullIntolerant: Boolean = true
+  override protected def nullSafeEval(g: Any, budget: Any, levels: Any): Any =
+    GeomRT.coverRes(g.asInstanceOf[Array[Byte]], budget.asInstanceOf[Int],
+      levels.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toIntArray())
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (g, b, lv) => s"${RT.C}.coverRes($g, $b, $lv.toIntArray())")
+  override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression): Expression = copy(f, s, t)
+}
+
 /** cell_parent(cell, res) → ancestor id at coarser resolution. */
 case class CellParent(left: Expression, right: Expression) extends BinaryExpression with Serializable {
   override def dataType: DataType = LongType
@@ -759,5 +773,54 @@ case class HexCoverBudget(children: Seq[Expression]) extends Expression with Ser
               ((org.apache.spark.sql.catalyst.util.ArrayData) ${evs(5).value}).toIntArray()));
         }""")
   }
+  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): Expression = copy(cs)
+}
+
+/** (xmin, ymin, xmax, ymax, budget, levels) → the ladder level a per-row
+  * budgeted bbox cover picks, by calling the cover kernel's own level
+  * choice `fn`: the level never disagrees with the cover. */
+abstract class BBoxCoverLevel(fn: String) extends Expression with Serializable {
+  override def dataType: DataType = IntegerType
+  override def nullable: Boolean = children.exists(_.nullable)
+  protected def level(x0: Double, y0: Double, x1: Double, y1: Double, budget: Int, levels: Array[Int]): Int
+  override def eval(input: InternalRow): Any = {
+    val vs = children.map(_.eval(input))
+    if (vs.contains(null)) null
+    else level(vs(0).asInstanceOf[Double], vs(1).asInstanceOf[Double],
+      vs(2).asInstanceOf[Double], vs(3).asInstanceOf[Double], vs(4).asInstanceOf[Int],
+      vs(5).asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toIntArray())
+  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+    val evs = children.map(_.genCode(ctx))
+    val anyNull = evs.map(e => s"${e.isNull}").mkString(" || ")
+    val childCode = evs.map(_.code).reduce(_ + _)
+    ev.copy(code =
+      code"""
+        $childCode
+        boolean ${ev.isNull} = $anyNull;
+        int ${ev.value} = -1;
+        if (!${ev.isNull}) {
+          ${ev.value} = $fn(${evs(0).value}, ${evs(1).value}, ${evs(2).value},
+            ${evs(3).value}, ${evs(4).value}, ${evs(5).value}.toIntArray());
+        }""")
+  }
+}
+
+/** s2_cover_level(xmin, ymin, xmax, ymax, budget, levels) → the level
+  * s2_cover_budget covers the box at. */
+case class S2CoverLevel(children: Seq[Expression]) extends BBoxCoverLevel("graft.index.S2Lite.chooseLevel") {
+  require(children.size == 6, "s2_cover_level(xmin, ymin, xmax, ymax, budget, levels)")
+  protected def level(x0: Double, y0: Double, x1: Double, y1: Double, budget: Int, levels: Array[Int]): Int =
+    graft.index.S2Lite.chooseLevel(x0, y0, x1, y1, budget, levels)
+  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): Expression = copy(cs)
+}
+
+/** hex_cover_level(xmin, ymin, xmax, ymax, budget, levels) → the resolution
+  * hex_cover_budget covers the box at. */
+case class HexCoverLevel(children: Seq[Expression]) extends BBoxCoverLevel("graft.index.HexLite.chooseRes") {
+  require(children.size == 6, "hex_cover_level(xmin, ymin, xmax, ymax, budget, levels)")
+  protected def level(x0: Double, y0: Double, x1: Double, y1: Double, budget: Int, levels: Array[Int]): Int =
+    graft.index.HexLite.chooseRes(x0, y0, x1, y1, budget, levels)
   override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): Expression = copy(cs)
 }

@@ -151,9 +151,16 @@ object GeomRT {
    *  `budget` (reference cover budget: QueryPlanners.scala:272-274). */
   def coverBudget(b: Array[Byte], budget: Int, levels: Array[Int]): Array[Long] = {
     val g = GeomCodec.fromWkb(b)
+    coverGeom(g, chooseRes(g, budget, levels))
+  }
+
+  /** The resolution [[coverBudget]] covers `b` at. */
+  def coverRes(b: Array[Byte], budget: Int, levels: Array[Int]): Int =
+    chooseRes(GeomCodec.fromWkb(b), budget, levels)
+
+  private def chooseRes(g: Geometry, budget: Int, levels: Array[Int]): Int = {
     val env = g.getEnvelopeInternal
-    val res = Z2.chooseRes(env.getMinX, env.getMinY, env.getMaxX, env.getMaxY, budget, levels)
-    coverGeom(g, res)
+    Z2.chooseRes(env.getMinX, env.getMinY, env.getMaxX, env.getMaxY, budget, levels)
   }
 
   def cellBox(id: Long): Array[Byte] = {

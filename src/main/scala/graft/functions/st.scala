@@ -61,6 +61,8 @@ object st {
   def cellCover(g: Column, res: Column): Column = col(CellCover(ex(g), ex(res)))
   def cellCoverBudget(g: Column, budget: Column, levels: Column): Column =
     col(CellCoverBudget(ex(g), ex(budget), ex(levels)))
+  def cellCoverLevel(g: Column, budget: Column, levels: Column): Column =
+    col(CellCoverLevel(ex(g), ex(budget), ex(levels)))
   def cellParent(c: Column, res: Column): Column = col(CellParent(ex(c), ex(res)))
   def cellBox(c: Column): Column = col(CellBox(ex(c)))
   def cellNeighbors(c: Column): Column = col(CellNeighbors(ex(c)))
@@ -81,6 +83,9 @@ object st {
   def s2CoverBudget(xmin: Column, ymin: Column, xmax: Column, ymax: Column,
                     budget: Column, levels: Column): Column =
     col(S2CoverBudget(Seq(ex(xmin), ex(ymin), ex(xmax), ex(ymax), ex(budget), ex(levels))))
+  def s2CoverLevel(xmin: Column, ymin: Column, xmax: Column, ymax: Column,
+                   budget: Column, levels: Column): Column =
+    col(S2CoverLevel(Seq(ex(xmin), ex(ymin), ex(xmax), ex(ymax), ex(budget), ex(levels))))
   def hexEncode(lon: Column, lat: Column, res: Column): Column =
     col(HexEncode(ex(lon), ex(lat), ex(res)))
   def hexParent(cell: Column, res: Column): Column = col(HexParent(ex(cell), ex(res)))
@@ -90,6 +95,9 @@ object st {
   def hexCoverBudget(xmin: Column, ymin: Column, xmax: Column, ymax: Column,
                      budget: Column, levels: Column): Column =
     col(HexCoverBudget(Seq(ex(xmin), ex(ymin), ex(xmax), ex(ymax), ex(budget), ex(levels))))
+  def hexCoverLevel(xmin: Column, ymin: Column, xmax: Column, ymax: Column,
+                    budget: Column, levels: Column): Column =
+    col(HexCoverLevel(Seq(ex(xmin), ex(ymin), ex(xmax), ex(ymax), ex(budget), ex(levels))))
   def geohashEncode(lon: Column, lat: Column, chars: Column): Column =
     col(GeohashEncode(ex(lon), ex(lat), ex(chars)))
   def geohashBox(h: Column): Column = col(GeohashBox(ex(h)))

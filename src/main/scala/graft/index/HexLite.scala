@@ -142,14 +142,18 @@ object HexLite {
     rows * cols
   }
 
-  /** Per-row adaptive cover: the finest level of `levels` whose estimated
-    * cover fits `budget` (coarsest as floor — same shape as the Z2/S2
-    * budget covers; one world-sized box degrades only its own row). */
-  def coverBudget(x0: Double, y0: Double, x1: Double, y1: Double,
-                  budget: Int, levels: Array[Int]): Array[Long] = {
+  /** The finest level of `levels` whose estimated cover fits `budget`
+    * (coarsest as floor — same shape as the Z2/S2 level choice): the level
+    * [[coverBudget]] covers at. */
+  def chooseRes(x0: Double, y0: Double, x1: Double, y1: Double,
+                budget: Int, levels: Array[Int]): Int = {
     val sorted = levels.sorted
-    val chosen = sorted.reverse.find(coverEstimate(x0, y0, x1, y1, _) <= budget)
-      .getOrElse(sorted.head)
-    coverBBox(x0, y0, x1, y1, chosen)
+    sorted.reverse.find(coverEstimate(x0, y0, x1, y1, _) <= budget).getOrElse(sorted.head)
   }
+
+  /** Per-row adaptive cover at [[chooseRes]]'s level: one world-sized box
+    * degrades only its own row. */
+  def coverBudget(x0: Double, y0: Double, x1: Double, y1: Double,
+                  budget: Int, levels: Array[Int]): Array[Long] =
+    coverBBox(x0, y0, x1, y1, chooseRes(x0, y0, x1, y1, budget, levels))
 }

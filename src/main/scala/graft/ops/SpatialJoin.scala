@@ -31,11 +31,13 @@ object SpatialJoin {
   /**
    * Join polygons/boxes against points: emit (poly row ++ point row) pairs
    * where `refine` holds. Each polygon is covered at ONE adaptive
-   * resolution; each point emits its ancestor cell at every ladder level,
-   * so every qualifying pair matches on exactly one cell — no duplicates,
-   * no post-join dedupe (the reference needs dedupe because non-point
-   * geometries are multi-indexed; single-resolution covers avoid that,
-   * cf. mayContainDuplicates, IndexSchema.scala:312-319).
+   * resolution; each point emits its ancestor cell at every ladder level
+   * the join probes (on the shuffled path, only the levels in the build
+   * side's level mask, which costs one build-side scan: [[cellJoin]]), so
+   * every qualifying pair matches on exactly one cell — no duplicates, no
+   * post-join dedupe (the reference needs dedupe because non-point
+   * geometries are multi-indexed; single-resolution covers avoid that, cf.
+   * mayContainDuplicates, IndexSchema.scala:312-319).
    */
   def polygonsWithPoints(
       polys: DataFrame, polyGeom: Column,
@@ -46,11 +48,7 @@ object SpatialJoin {
       broadcastPolys: Option[Boolean] = None,
       salts: Int = 8,
       knownHotCells: Option[Array[Long]] = None): DataFrame = {
-
     val levelsLit = typedLit(levels)
-    val polyCells = spreadBuild(polys).withColumn("__pcell",
-      explode(st.cellCoverBudget(polyGeom, lit(budget), levelsLit)))
-
     // finest-level cell once (one WKB parse), ancestors by bit math;
     // when the "geometry" is a constructed st_point(x, y), skip the WKB
     // round-trip entirely and bit-interleave the raw doubles
@@ -64,16 +62,54 @@ object SpatialJoin {
         case _ => st.cellOf(pointGeom, lit(finest))
       }
     }
-    val withFinest = points.withColumn("__fcell", finestCell)
-    val ancestorCols = levels.map(r =>
-      if (r == finest) col("__fcell") else st.cellParent(col("__fcell"), lit(r)))
-    val pointCells = withFinest
-      .withColumn("__qcell", explode(array(ancestorCols: _*)))
-      .drop("__fcell")
-
-    coverJoin(polyCells, pointCells, pmod(hash(pointGeom), lit(salts)), refine,
-      broadcastPolys.getOrElse(coverFitsBroadcast(polys, budget)), salts, knownHotCells)
+    cellJoin(polys, st.cellCoverBudget(polyGeom, lit(budget), levelsLit),
+      st.cellCoverLevel(polyGeom, lit(budget), levelsLit),
+      points, Some(finestCell), ancestorAt(st.cellParent, finest),
+      pmod(hash(pointGeom), lit(salts)), refine, levels, budget, broadcastPolys, salts, knownHotCells)
   }
+
+  /**
+   * The cover join of every cell family (Z2, S2, hex). Families differ in
+   * two places: `coverLevel`, the level a build row's budgeted `cover`
+   * picks (the cover kernel's own level choice), and `cellAt(L)`, a point's
+   * cell at level L (it may read `__fcell`, computed once by `finest`).
+   *
+   * A probe row at a level no cover uses matches nothing, yet on the
+   * shuffled path it is shuffled, sorted and merged. So that path first
+   * runs one job over the build side, the bitwise OR of `1 << coverLevel`,
+   * and points emit cells only at the levels in this mask; the hot-cell
+   * sample then runs over the pruned probe (partition elimination across a
+   * join). The mask holds every level a cover uses, so no pair is lost; an
+   * empty or all-null build side gives an empty mask and an empty result.
+   * On the broadcast path an extra level costs one hash lookup, less than
+   * the scan: every level is probed.
+   */
+  private def cellJoin(
+      polys: DataFrame, cover: Column, coverLevel: Column,
+      points: DataFrame, finest: Option[Column], cellAt: Int => Column, probeSalt: Column,
+      refine: DataFrame => Column, levels: Array[Int], budget: Int,
+      broadcastPolys: Option[Boolean], salts: Int, knownHotCells: Option[Array[Long]]): DataFrame = {
+    val doBroadcast = broadcastPolys.getOrElse(coverFitsBroadcast(polys, budget))
+    val probeLevels =
+      if (doBroadcast) levels
+      else { val mask = levelMask(polys, coverLevel); levels.filter(l => (mask >>> l & 1L) == 1L) }
+    val cells = if (probeLevels.isEmpty) typedLit(Array.empty[Long]) else array(probeLevels.toSeq.map(cellAt): _*)
+    val probeCells = finest.fold(points)(points.withColumn("__fcell", _))
+      .withColumn("__qcell", explode(cells)).drop("__fcell")
+    val buildCells = spreadBuild(polys).withColumn("__pcell", explode(cover))
+    coverJoin(buildCells, probeCells, probeSalt, refine, doBroadcast, salts, knownHotCells)
+  }
+
+  /** Bit L is set iff some build row's cover sits at level L; null levels
+    * set none. One job, no exchange (a `bit_or` aggregate runs as two jobs
+    * under adaptive execution: ~150 ms more on a 256k-row build side, 4 cores). */
+  private[graft] def levelMask(polys: DataFrame, coverLevel: Column): Long =
+    polys.select(coverLevel).queryExecution.toRdd
+      .map(r => if (r.isNullAt(0)) 0L else 1L << r.getInt(0)).fold(0L)(_ | _)
+
+  /** A point's cell at level `l` by bit math from its cell at `finest`. */
+  private def ancestorAt(parent: (Column, Column) => Column, finest: Int)(l: Int): Column =
+    if (l == finest) col("__fcell") else parent(col("__fcell"), lit(l))
 
   /** Broadcast the cover side? A plan-statistics cost probe — no job
     * launched when stats are real (the reference's cost-based strategy
@@ -128,7 +164,10 @@ object SpatialJoin {
   /**
    * The strategy core shared by every cell family (Z2, S2, hex): build
    * side carries exploded cover cells in `__pcell`, probe side its cell(s)
-   * in `__qcell`. Broadcast when decided; otherwise shuffle both sides on
+   * in `__qcell` — on the shuffled path only at the levels in the build
+   * side's level mask ([[cellJoin]]; the mask costs one build-side scan),
+   * so the hot-cell sample, the exchange and the sorts see only probe rows
+   * that can match. Broadcast when decided; otherwise shuffle both sides on
    * the cell key with explicit hot-cell salting (north rule: skew handled
    * explicitly; reference precedent: shard tier in the key layout,
    * AccumuloDataStore.scala:100-111). Hot build rows replicate across all
@@ -183,7 +222,7 @@ object SpatialJoin {
 
   /** S2 ladder levels for [[containsJoinS2]]: each polygon covers at the
     * finest level whose cover fits the budget; each point emits its
-    * ancestor at every rung. */
+    * ancestor at every probed rung. */
   val S2Levels: Array[Int] = Array(2, 4, 6, 8)
   val S2Budget = 256
 
@@ -192,8 +231,8 @@ object SpatialJoin {
    * covers its bounding box at its OWN adaptive S2 level (per-row budgeted
    * cover — the Z2 path's shape; r2's single global level let one
    * world-sized polygon coarsen every row's cover); each point encodes
-   * once at the finest ladder level and emits its ancestor at every rung,
-   * so every qualifying pair matches on exactly one cell — no dedupe.
+   * once at the finest ladder level and emits its ancestor at every probed
+   * rung, so every qualifying pair matches on exactly one cell — no dedupe.
    * Same broadcast-or-salted strategy choice as the Z2 path, with the
    * broadcast factor derived from the actual cover budget (not a constant).
    */
@@ -206,21 +245,12 @@ object SpatialJoin {
       broadcastPolys: Option[Boolean] = None,
       salts: Int = 8,
       knownHotCells: Option[Array[Long]] = None): DataFrame = {
-    val polyCells = spreadBuild(polys).withColumn("__pcell", explode(st.s2CoverBudget(
-      col(xminName), col(yminName), col(xmaxName), col(ymaxName),
-      lit(budget), typedLit(levels))))
-    val finest = levels.last
-    val withFinest = points.withColumn("__fcell",
-      st.s2Encode(col(lonName), col(latName), lit(finest)))
-    val ancestorCols = levels.map(l =>
-      if (l == finest) col("__fcell") else st.s2Parent(col("__fcell"), lit(l)))
-    val pointCells = withFinest
-      .withColumn("__qcell", explode(array(ancestorCols: _*)))
-      .drop("__fcell")
-    coverJoin(polyCells, pointCells,
-      pmod(hash(col(lonName), col(latName)), lit(salts)),
-      df => st.contains(df(polyGeomName), st.point(df(lonName), df(latName))),
-      broadcastPolys.getOrElse(coverFitsBroadcast(polys, budget)), salts, knownHotCells)
+    val Seq(x0, y0, x1, y1, lon, lat) = Seq(xminName, yminName, xmaxName, ymaxName, lonName, latName).map(col)
+    cellJoin(polys, st.s2CoverBudget(x0, y0, x1, y1, lit(budget), typedLit(levels)),
+      st.s2CoverLevel(x0, y0, x1, y1, lit(budget), typedLit(levels)),
+      points, Some(st.s2Encode(lon, lat, lit(levels.last))), ancestorAt(st.s2Parent, levels.last),
+      pmod(hash(lon, lat), lit(salts)), df => st.contains(df(polyGeomName), st.point(df(lonName), df(latName))),
+      levels, budget, broadcastPolys, salts, knownHotCells)
   }
 
   /** Hex ladder resolutions for [[containsJoinHex]] (circumradius 4° → 0.25°). */
@@ -231,7 +261,7 @@ object SpatialJoin {
    * Point-in-polygon join through the hexagonal tier (HexLite — the "H3"
    * half of the north star's H3/S2 pair). Each polygon covers its bbox at
    * its OWN budgeted hex resolution; each point encodes DIRECTLY at every
-   * ladder level — hex hierarchies have only APPROXIMATE parent/child
+   * probed ladder level — hex hierarchies have only APPROXIMATE parent/child
    * containment (a child hex is not inside its parent, exactly as in H3),
    * so probe cells must NOT be derived via `hex_parent` bit/center math.
    * Direct per-level encode keeps the superset proof: a point inside the
@@ -249,15 +279,12 @@ object SpatialJoin {
       broadcastPolys: Option[Boolean] = None,
       salts: Int = 8,
       knownHotCells: Option[Array[Long]] = None): DataFrame = {
-    val polyCells = spreadBuild(polys).withColumn("__pcell", explode(st.hexCoverBudget(
-      col(xminName), col(yminName), col(xmaxName), col(ymaxName),
-      lit(budget), typedLit(levels))))
-    val pointCells = points.withColumn("__qcell", explode(array(
-      levels.map(l => st.hexEncode(col(lonName), col(latName), lit(l))): _*)))
-    coverJoin(polyCells, pointCells,
-      pmod(hash(col(lonName), col(latName)), lit(salts)),
-      df => st.contains(df(polyGeomName), st.point(df(lonName), df(latName))),
-      broadcastPolys.getOrElse(coverFitsBroadcast(polys, budget)), salts, knownHotCells)
+    val Seq(x0, y0, x1, y1, lon, lat) = Seq(xminName, yminName, xmaxName, ymaxName, lonName, latName).map(col)
+    cellJoin(polys, st.hexCoverBudget(x0, y0, x1, y1, lit(budget), typedLit(levels)),
+      st.hexCoverLevel(x0, y0, x1, y1, lit(budget), typedLit(levels)),
+      points, None, l => st.hexEncode(lon, lat, lit(l)),
+      pmod(hash(lon, lat), lit(salts)), df => st.contains(df(polyGeomName), st.point(df(lonName), df(latName))),
+      levels, budget, broadcastPolys, salts, knownHotCells)
   }
 
   /** Probe-side cell histogram → cells whose estimated row count exceeds
