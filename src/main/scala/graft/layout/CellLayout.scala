@@ -4,6 +4,9 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import graft.functions.st
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -136,11 +139,13 @@ object CellLayout {
   /**
    * Checkpointed cell-partitioned write. Returns the manifest. `maxWaves`
    * bounds how many waves run in THIS invocation (test hook for kill/resume;
-   * production leaves it at Int.MaxValue).
+   * production leaves it at Int.MaxValue). A wave's manifest rows are the
+   * record counts in the footers of the parquet files it just wrote, read
+   * with the session's Hadoop conf: the output is never scanned back.
    */
   def write(df: DataFrame, outDir: String, inputPath: String,
             waves: Int = 4, maxWaves: Int = Int.MaxValue): Map[Long, BucketMeta] = {
-    val spark = df.sparkSession
+    val hadoopConf = df.sparkSession.sessionState.newHadoopConf()
     require(Seq("cell", "bucket", "salt").forall(df.columns.contains),
       "call withCellKeys first")
 
@@ -172,12 +177,6 @@ object CellLayout {
       val wallMs = (System.nanoTime() - t0) / 1000000
 
       // per-bucket metrics from the written files (lineage: input → bucket)
-      // partition-dir values read back as INT; normalize to long
-      val counts = spark.read.parquet(outDir)
-        .withColumn("bucket", col("bucket").cast("long"))
-        .filter(col("bucket").isin(bs: _*))
-        .groupBy("bucket").count().collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
       // ONE walk per wave (bucket dirs may nest under day=… partitions):
       // group the parquet files by their bucket dir — a per-bucket walk
       // would be O(buckets × files) driver-side at cluster bucket counts
@@ -194,8 +193,11 @@ object CellLayout {
       bs.foreach { b =>
         val files = byBucket.getOrElse(b, Array.empty)
         val bytes = files.map(f => Files.size(Paths.get(f))).sum
-        manifest += b -> BucketMeta(b, counts.getOrElse(b, 0L), bytes, files.length,
-          w, inputPath, wallMs)
+        val rows = files.map { f =>
+          val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f), hadoopConf))
+          try r.getRecordCount finally r.close()
+        }.sum
+        manifest += b -> BucketMeta(b, rows, bytes, files.length, w, inputPath, wallMs)
       }
       writeManifest(outDir, manifest) // atomic checkpoint after each wave
     }

@@ -1,8 +1,9 @@
 package graft.ops
 
 import graft.functions.tx
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 /**
  * Deduplication operators for web-scale text corpora. Exact dedup is a
@@ -33,13 +34,18 @@ import org.apache.spark.sql.functions._
  * the right default for long multi-hour cluster runs. Override either
  * choice with `spark.graft.dedup.materialize` = persist | localCheckpoint |
  * checkpoint. Blocks are freed by the ContextCleaner when the frames are
- * GC'd.
+ * GC'd. This small/big size fork steers [[minhashPairs]] and
+ * [[simhashPairs]] only; [[clusters]] forks on its edge count instead.
  */
 object Dedup {
 
   /** Inputs whose optimizer-estimated size is below this skip the eager
     * checkpoint: recomputing a few MB is cheaper than the checkpoint job. */
   val SmallCorpusBytes: Long = 64L * 1024 * 1024
+
+  /** Candidate graphs of at most this many edges (16 MB of long id pairs)
+    * finish [[clusters]] on the driver. */
+  val DriverEdges: Int = 1 << 20
 
   /** True when the plan's estimated size crosses [[SmallCorpusBytes]];
     * unknown-size sentinels (LocalRelation, post-join frames) count as big —
@@ -417,30 +423,36 @@ object Dedup {
   }
 
   /**
-   * Near-duplicate clusters from a candidate-pair table: connected
-   * components by iterative min-label propagation with pointer jumping
-   * (each round every vertex takes the min label in its neighborhood,
-   * then follows one hop of the label table; converges in O(log diameter)
-   * rounds). Returns
-   * (id, cluster) with cluster = min id of the component. Distributed:
-   * each round is one equi-join + aggregate; lineage is truncated with
-   * localCheckpoint to keep plans bounded.
+   * Near-duplicate clusters: connected components of the candidate-pair
+   * graph as (id, cluster), cluster = min id of the component, both of the
+   * ids' (widened) type. One job collects up to [[DriverEdges]] + 1 edges;
+   * a graph that fits finishes on the driver by union-find, the one-machine
+   * finish of "Connected Components in MapReduce and Beyond" (Kiveris et
+   * al., SoCC 2014). Bigger graphs run distributed min-label propagation
+   * with pointer jumping: O(log diameter) rounds, at most `maxIter`, each
+   * one equi-join + aggregate with lineage cut by localCheckpoint. Both
+   * paths give the same rows; a null endpoint links nothing and labels as
+   * (null, null).
    */
   def clusters(pairs: DataFrame, idAName: String, idBName: String,
-               maxIter: Int = 20): DataFrame = {
-    // partition ONCE on the keys every round reuses: edges by dst and
-    // labels by id (the join keys — SMJ then needs no per-round exchange;
-    // the one exchange per round is the groupBy(src)). Small edge sets use
-    // smallParts-many partitions — each round is several stages over an
-    // already-tiny frame, and 32-task dispatch per stage dominated the
-    // wall — big ones the session's shuffle parallelism.
-    val parts =
-      if (isBig(pairs)) pairs.sparkSession.sessionState.conf.numShufflePartitions
-      else smallParts(pairs)
-    val edges = pairs.select(col(idAName).as("src"), col(idBName).as("dst"))
+               maxIter: Int = 20): DataFrame =
+    clusters(pairs, idAName, idBName, maxIter, DriverEdges)
+
+  /** [[clusters]] with the driver-path edge bound as an argument; -1 always
+    * runs the distributed rounds. */
+  private[ops] def clusters(pairs: DataFrame, idAName: String, idBName: String,
+                            maxIter: Int, driverEdges: Int): DataFrame = {
+    val directed = pairs.select(col(idAName).as("src"), col(idBName).as("dst"))
       .union(pairs.select(col(idBName).as("src"), col(idAName).as("dst")))
-      .repartition(parts, col("dst"))
-      .distinct().localCheckpoint(true)
+    val idField = directed.schema("src")
+    if (idField.dataType == IntegerType || idField.dataType == LongType) {
+      val local = pairs.select(col(idAName), col(idBName)).limit(driverEdges + 1).collect()
+      if (local.length <= driverEdges) return driverClusters(pairs.sparkSession, local, idField)
+    }
+    // distributed rounds, partitioned ONCE on the join keys every round
+    // reuses (edges by dst, labels by id): the one exchange is groupBy(src)
+    val parts = pairs.sparkSession.sessionState.conf.numShufflePartitions
+    val edges = directed.repartition(parts, col("dst")).distinct().localCheckpoint(true)
     var labels = edges.select(col("src").as("id"))
       .repartition(parts, col("id")).distinct()
       .withColumn("label", col("id")).localCheckpoint(true)
@@ -482,6 +494,32 @@ object Dedup {
       i += 1
     }
     labels.withColumnRenamed("label", "cluster")
+  }
+
+  /** Union-find over collected edges. Ids sort into a dense `long[]` index,
+    * so a union toward the smaller root index keeps the component's min id. */
+  private def driverClusters(spark: SparkSession, edges: Array[Row],
+                             idField: StructField): DataFrame = {
+    val ids = edges.flatMap(r => (0 to 1).filterNot(r.isNullAt).map(r.getAs[Number](_).longValue))
+    java.util.Arrays.sort(ids)
+    val n = (1 until ids.length).foldLeft(math.min(ids.length, 1)) { (k, i) =>
+      if (ids(i) != ids(k - 1)) { ids(k) = ids(i); k + 1 } else k
+    }
+    val parent = Array.range(0, n)
+    @annotation.tailrec def find(x: Int): Int =
+      if (parent(x) == x) x else { parent(x) = parent(parent(x)); find(parent(x)) }
+    def index(r: Row, j: Int) = java.util.Arrays.binarySearch(ids, 0, n, r.getAs[Number](j).longValue)
+    edges.foreach { r =>
+      if (!r.anyNull) {
+        val (x, y) = (find(index(r, 0)), find(index(r, 1)))
+        if (x < y) parent(y) = x else parent(x) = y
+      }
+    }
+    val asId: Long => Any = if (idField.dataType == IntegerType) _.toInt else identity
+    val rows = (0 until n).map(i => Row(asId(ids(i)), asId(ids(find(i))))) ++
+      edges.find(_.anyNull).map(_ => Row(null, null))
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+      StructType(Seq(idField.copy(name = "id"), idField.copy(name = "cluster"))))
   }
 
   /** Rows surviving near-dup clustering: the min-id representative of each
