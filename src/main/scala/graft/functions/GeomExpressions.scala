@@ -29,8 +29,23 @@ abstract class GeomPredicate(fn: String) extends BinaryExpression with Serializa
     defineCodeGen(ctx, ev, (a, b) => s"${RT.C}.$fn($a, $b)")
 }
 
+/** st_contains(g, p). For p = st_point(x, y), generated code passes x and y
+ *  to [[GeomRT.containsXY]] as doubles (no point WKB per row; null if g, x
+ *  or y is null); interpreted eval reaches the same kernel via the WKB. */
 case class StContains(left: Expression, right: Expression) extends GeomPredicate("contains") {
   protected def evalBytes(a: Array[Byte], b: Array[Byte]): Boolean = GeomRT.contains(a, b)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = right match {
+    case StPoint(x, y) =>
+      import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+      val evs = Seq(left, x, y).map(_.genCode(ctx))
+      ev.copy(code =
+        code"""
+          ${evs.map(_.code).reduce(_ + _)}
+          boolean ${ev.isNull} = ${evs.map(e => s"${e.isNull}").mkString(" || ")};
+          boolean ${ev.value} = !${ev.isNull} &&
+            ${RT.C}.containsXY(${evs(0).value}, ${evs(1).value}, ${evs(2).value});""")
+    case _ => super.doGenCode(ctx, ev)
+  }
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
 case class StIntersects(left: Expression, right: Expression) extends GeomPredicate("intersects") {

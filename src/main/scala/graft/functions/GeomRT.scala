@@ -13,11 +13,12 @@ import org.locationtech.jts.geom.prep.{PreparedGeometry, PreparedGeometryFactory
  * generated code can invoke it directly and whole-stage codegen spans stay
  * intact (the expressions' doGenCode emits `graft.functions.GeomRT.xxx(...)`).
  *
- * The first argument of each binary predicate is prepared and cached in a
- * per-thread LRU keyed by WKB content — in cell-join refinement the build
- * side (regions) repeats across probe matches, so each distinct geometry is
- * parsed + prepared once per thread, not once per output row. This is the
- * Spark analog of the reference's one-time iterator setup
+ * Point-in-polygon, the refine of every cover join, runs in [[containsXY]]:
+ * rectangles are tested on their WKB bytes, points arrive as raw doubles.
+ * Other predicates prepare their first argument and cache it in a per-thread
+ * LRU keyed by WKB content, so each distinct build-side geometry is parsed +
+ * prepared once per thread, not once per output row — the Spark analog of the
+ * reference's one-time iterator setup
  * (geomesa-core/.../iterators/SpatioTemporalIntersectingIterator.scala:56-70).
  */
 object GeomRT {
@@ -47,7 +48,37 @@ object GeomRT {
   }
 
   // ---- predicates (arg0 prepared) ----
-  def contains(a: Array[Byte], b: Array[Byte]): Boolean = prepared(a).contains(GeomCodec.fromWkbFast(b))
+  def contains(a: Array[Byte], b: Array[Byte]): Boolean = {
+    val bb = if (b.length == 21 && (b(0) == 0 || b(0) == 1)) wkbBuffer(b) else null
+    if (bb != null && bb.getInt(1) == 1) containsXY(a, bb.getDouble(5), bb.getDouble(13))
+    else prepared(a).contains(GeomCodec.fromWkbFast(b))
+  }
+
+  /** Point-in-polygon on raw doubles. A plain 2D one-ring polygon that JTS
+   *  `Polygon.isRectangle` accepts (closed 5-point ring, every vertex on the
+   *  envelope, every edge along one axis) is answered from its WKB bytes as
+   *  JTS `RectangleContains` answers it: strictly inside the envelope.
+   *  Holes, multi-parts, SRID or Z flags and NaN vertices take prepared JTS. */
+  def containsXY(a: Array[Byte], x: Double, y: Double): Boolean = {
+    val bb = if (a.length == 93 && (a(0) == 0 || a(0) == 1)) wkbBuffer(a) else null
+    if (bb != null && bb.getInt(1) == 3 && bb.getInt(5) == 1 && bb.getInt(9) == 5) {
+      def vx(i: Int) = bb.getDouble(13 + 16 * i); def vy(i: Int) = bb.getDouble(21 + 16 * i)
+      val x0 = math.min(math.min(vx(0), vx(1)), math.min(vx(2), vx(3)))
+      val x1 = math.max(math.max(vx(0), vx(1)), math.max(vx(2), vx(3)))
+      val y0 = math.min(math.min(vy(0), vy(1)), math.min(vy(2), vy(3)))
+      val y1 = math.max(math.max(vy(0), vy(1)), math.max(vy(2), vy(3)))
+      def onEnvelope(i: Int) = (vx(i) == x0 || vx(i) == x1) && (vy(i) == y0 || vy(i) == y1)
+      def oneAxis(i: Int) = (vx(i) != vx(i - 1)) != (vy(i) != vy(i - 1))
+      if (vx(4) == vx(0) && vy(4) == vy(0) && onEnvelope(0) && onEnvelope(1) && onEnvelope(2) &&
+          onEnvelope(3) && oneAxis(1) && oneAxis(2) && oneAxis(3) && oneAxis(4))
+        return x > x0 && x < x1 && y > y0 && y < y1
+    }
+    prepared(a).contains(GeomCodec.point(x, y))
+  }
+
+  private def wkbBuffer(b: Array[Byte]): java.nio.ByteBuffer = java.nio.ByteBuffer.wrap(b)
+    .order(if (b(0) == 1) java.nio.ByteOrder.LITTLE_ENDIAN else java.nio.ByteOrder.BIG_ENDIAN)
+
   def intersects(a: Array[Byte], b: Array[Byte]): Boolean = prepared(a).intersects(GeomCodec.fromWkbFast(b))
   def within(a: Array[Byte], b: Array[Byte]): Boolean = prepared(b).contains(GeomCodec.fromWkbFast(a))
   def covers(a: Array[Byte], b: Array[Byte]): Boolean = prepared(a).covers(GeomCodec.fromWkbFast(b))

@@ -108,6 +108,9 @@ object GeoHashStr {
     sb.toString
   }
 
+  /** The most cells [[neighbors]] lists: a polar row at 6 characters and 3 cells of the next row (32,770). */
+  val MaxNeighbors: Int = 1 << 16
+
   /**
    * The geohash cells TOUCHING `hash` at its own precision — the 8-ring
    * with longitude wrapping at the antimeridian, plus, for a cell on a
@@ -115,17 +118,23 @@ object GeoHashStr {
    * Same contract as the reference's TouchingGeoHashes
    * (geomesa-core/.../process/knn/TouchingGeoHashes.scala), used there to
    * spiral kNN searches outward; here it serves geohash-keyed bucket
-   * expansion (the engine's own kNN ring runs on Z2).
+   * expansion (the engine's own kNN ring runs on Z2). A polar-row cell
+   * finer than 6 characters would list more than [[MaxNeighbors]] cells
+   * (2^25 at 10 characters) and is refused.
    */
   def neighbors(hash: String): Seq[String] = {
     val (lonIdx, latIdx, lonCells, latCells) = indices(hash)
+    val polar = latIdx == 0 || latIdx == latCells - 1
+    require(!polar || lonCells + 2 <= MaxNeighbors,
+      s"geohash '$hash' lies on a polar row and touches all of it: ${lonCells + 2} cells at " +
+      s"${hash.length} characters, over the bound of $MaxNeighbors; use 6 characters or fewer")
     val out = scala.collection.mutable.LinkedHashSet.empty[String]
     for (dj <- -1 to 1; di <- -1 to 1; if di != 0 || dj != 0) {
       val lj = latIdx + dj
       if (lj >= 0 && lj < latCells)
         out += fromIndices(java.lang.Math.floorMod(lonIdx + di, lonCells), lj, hash.length)
     }
-    if (latIdx == 0 || latIdx == latCells - 1)
+    if (polar)
       for (l <- 0L until lonCells if l != lonIdx)
         out += fromIndices(l, latIdx, hash.length)
     out.toSeq

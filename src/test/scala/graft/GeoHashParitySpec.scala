@@ -208,6 +208,22 @@ class GeoHashParitySpec extends AnyFunSuite {
     }
   }
 
+  test("neighbors of a polar-row cell are refused past the bound, not built") {
+    // 10 characters: the polar row holds 2^25 cells; the bound refuses it up front
+    for (h <- Seq("0000000000", "zzzzzzzzzz", "bpbpbpbpbp", GeoHashStr.encode(12.0, 89.99999999, 10))) {
+      val e = intercept[IllegalArgumentException](GeoHashStr.neighbors(h))
+      assert(e.getMessage.contains("polar row") && e.getMessage.contains("6 characters"), e.getMessage)
+    }
+    assert(intercept[IllegalArgumentException](GeoHashStr.neighbors("0000000")).getMessage
+      .contains(s"${(1 << 18) + 2} cells at 7 characters"))
+    // a non-polar cell at 10 characters keeps its 8-ring
+    assert(GeoHashStr.neighbors(GeoHashStr.encode(-78.49, 38.07, 10)).size === 8)
+    // 6 characters is the finest polar row that fits: the row plus 3 cells of the next
+    val row = GeoHashStr.neighbors("000000")
+    assert(row.size === (1 << 15) + 2 && row.size <= GeoHashStr.MaxNeighbors)
+    assert(row.distinct.size === row.size && !row.contains("000000"))
+  }
+
   test("cover property: every sampled point of the box lands in exactly one cover cell") {
     val rng = new scala.util.Random(11)
     for (_ <- 1 to 40) {

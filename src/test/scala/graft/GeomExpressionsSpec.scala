@@ -113,6 +113,35 @@ class GeomExpressionsSpec extends SparkSpec {
     assert(r.isNullAt(0) && r.isNullAt(1) && r.isNullAt(2) && r.isNullAt(3))
   }
 
+  test("st_contains(g, st_point(x, y)): generated code == interpreted, nulls included") {
+    import org.apache.spark.sql.types._
+    val box = GeomCodec.toWkb(GeomCodec.box(0, 0, 2, 2))
+    val tri = GeomCodec.toWkb(GeomCodec.fromWkt("POLYGON ((0 0, 2 0, 1 2, 0 0))"))
+    val xys = Seq[(java.lang.Double, java.lang.Double)]((1.0, 1.0), (0.0, 1.0), (1.5, 0.2), (3.0, 1.0),
+      (Double.NaN, 1.0), (1.0, Double.PositiveInfinity), (null, 1.0), (1.0, null))
+    val rows = for (g <- Seq(box, tri, null); (x, y) <- xys) yield Row(g, x, y)
+    val schema = StructType(Seq(StructField("g", BinaryType), StructField("x", DoubleType), StructField("y", DoubleType)))
+    // an RDD source, so the optimizer cannot fold the projection over a local relation
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows.zipWithIndex.map {
+      case (r, i) => Row.fromSeq(i +: r.toSeq) }, 2), StructType(StructField("id", IntegerType) +: schema.fields))
+    def run(): Seq[Row] =
+      df.selectExpr("id", "st_contains(g, st_point(x, y)) AS c").collect().sortBy(_.getInt(0)).toSeq
+    val generated = df.selectExpr("st_contains(g, st_point(x, y))").queryExecution.debug.codegenToSeq()
+    assert(generated.exists(_._2.contains("GeomRT.containsXY(")), generated.map(_._2).mkString.take(2000))
+    val codegen = run()
+    val interpreted = withSqlConf("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(run())
+    assert(codegen === interpreted)
+    val byId = codegen.map(r => r.getInt(0) -> (if (r.isNullAt(1)) None else Some(r.getBoolean(1)))).toMap
+    rows.zipWithIndex.foreach { case (Row(g, x, y), i) =>
+      val want = if (g == null || x == null || y == null) None
+        else Some(GeomCodec.fromWkb(g.asInstanceOf[Array[Byte]]).contains(
+          GeomCodec.point(x.asInstanceOf[Double], y.asInstanceOf[Double])))
+      assert(byId(i) === want, s"row $i")
+    }
+    assert(byId.values.count(_.contains(true)) === 4 && byId.values.count(_.isEmpty) === 12)
+  }
+
   test("cell expressions agree with Z2 core") {
     import graft.index.Z2
     val r = spark.sql(
