@@ -1,46 +1,37 @@
 package graft.ops
 
-import graft.functions.tx
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import graft.functions.{TextRT, tx}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType}
 
 /**
  * Deduplication operators for web-scale text corpora. Exact dedup is a
- * hash group-by; near-dup is shingle→MinHash→LSH-band→bucket-join→exact
- * Jaccard verify — all shuffle-on-key plans that scale horizontally (the
- * candidate join keys are the LSH buckets, never a cross join).
+ * hash group-by; near-dup is shingle→MinHash→LSH-band→bucket→exact
+ * Jaccard verify — shuffle-on-key plans that scale horizontally (the
+ * candidate keys are the LSH buckets, never a cross join).
  *
- * Both near-dup paths collapse exact-duplicate texts to ONE representative
- * per group BEFORE candidate generation (one group-by on the 16-byte
- * content hash, upstream of the band/block shuffle; the text column itself
- * never shuffles): a web
- * corpus's >maxBucket cluster of byte-identical boilerplate pages (404s,
- * templates) would otherwise oversize EVERY band bucket it touches and be
- * silently dropped by the cap — exact duplicates are a group-by problem,
- * not an LSH problem. Verified pairs between representatives are expanded
- * back to all member pairs (plus the within-group pairs, which are exact
- * duplicates by construction), so the output is still the full pair set.
+ * Both near-dup operators collapse exact-duplicate texts to ONE
+ * representative per group BEFORE candidate generation (one group-by on the
+ * 16-byte content hash): a web corpus's >maxBucket cluster of
+ * byte-identical boilerplate pages (404s, templates) would otherwise
+ * oversize EVERY band bucket it touches and be silently dropped by the cap.
+ * Verified pairs between representatives expand back to all member pairs,
+ * plus the within-group pairs (exact duplicates by construction).
  *
- * Materialization policy (all compact per-doc frames go through
- * [[compactFrame]]): small inputs use a LAZY persist (no extra job — the
- * eager-checkpoint constant dominated small-corpus latency); large inputs
- * ALSO default to a lazy persist — the columnar cache ships compressed
- * batches, where an eager `localCheckpoint`'s raw-row blocks pay full
- * per-row deserialization on every remote read and measurably halve
- * multi-executor scaling (BENCH/CLUSTER.md r4). When a reliable checkpoint
- * dir is set (`sparkContext.setCheckpointDir`), big inputs upgrade to an
- * eager RELIABLE `checkpoint` instead — lineage-free AND executor-loss-safe,
- * the right default for long multi-hour cluster runs. Override either
- * choice with `spark.graft.dedup.materialize` = persist | localCheckpoint |
- * checkpoint. Blocks are freed by the ContextCleaner when the frames are
- * GC'd. This small/big size fork steers [[minhashPairs]] and
- * [[simhashPairs]] only; [[clusters]] forks on its edge count instead.
+ * Each operator forks on the corpus size ([[isBig]]). A small corpus takes
+ * ONE band exchange ([[bucketPairs]]): each band bucket verifies and expands
+ * its own pairs where it lands, so the plan is three exchanges (collapse,
+ * bands, pair dedupe) and materializes nothing. A big corpus keeps the
+ * slim-shuffle shape — (band, id) rows through a band self-join, payloads
+ * re-attached and groups expanded by equi-joins — and materializes its
+ * compact per-doc frames per [[compactFrame]]'s policy. [[clusters]] forks
+ * on its edge count instead.
  */
 object Dedup {
 
-  /** Inputs whose optimizer-estimated size is below this skip the eager
-    * checkpoint: recomputing a few MB is cheaper than the checkpoint job. */
+  /** Inputs whose optimizer-estimated size is below this take the small
+    * path: one band exchange, nothing materialized. */
   val SmallCorpusBytes: Long = 64L * 1024 * 1024
 
   /** Candidate graphs of at most this many edges (16 MB of long id pairs)
@@ -51,7 +42,7 @@ object Dedup {
     * unknown-size sentinels (LocalRelation, post-join frames) count as big —
     * the safe direction, matching pre-r4 behavior.
     * `spark.graft.dedup.sizeClass` = big | small overrides the estimate —
-    * a test seam (the small/big paths must agree; DedupGuardRecallSpec
+    * a test seam (the small/big paths must agree; DedupParitySpec
     * asserts parity) that also lets operators pin a path in production. */
   private def isBig(df: DataFrame): Boolean =
     df.sparkSession.conf.getOption("spark.graft.dedup.sizeClass") match {
@@ -63,24 +54,20 @@ object Dedup {
       case None => df.queryExecution.optimizedPlan.stats.sizeInBytes > BigInt(SmallCorpusBytes)
     }
 
-  /** Materialize a compact derived frame per the object-doc policy. Small
-    * inputs use a LAZY persist: the fan-out branches still read cached
-    * blocks, but no eager checkpoint job runs up front (measured best of
-    * {eager localCheckpoint, lazy localCheckpoint, no materialization,
-    * lazy persist} on the sf0.1 fixture).
-    *
-    * Big inputs default to PERSIST as well: the columnar cache stores
-    * compressed batches, so on a multi-executor topology the fan-out
-    * branches that land on other executors fetch compact column bytes —
-    * the eager `localCheckpoint` alternative stores raw row objects whose
-    * remote reads pay full per-row deserialization, measured to HALVE the
-    * 1→4-executor scaling efficiency of the whole pipeline (0.47 vs ~0.9
-    * for every individual sub-stage; BENCH/CLUSTER.md r4). Override with
+  /** Materialize a compact derived frame of the big path, whose DAG fans
+    * out. The default is a lazy PERSIST: the columnar cache stores
+    * compressed batches, so fan-out branches on other executors fetch
+    * compact column bytes — an eager `localCheckpoint` stores raw row
+    * objects whose remote reads pay full per-row deserialization, measured
+    * to HALVE the 1→4-executor scaling efficiency of the whole pipeline
+    * (0.47 vs ~0.9 for every sub-stage; BENCH/CLUSTER.md r4). With a
+    * reliable checkpoint dir set (`sparkContext.setCheckpointDir`) the
+    * default is an eager RELIABLE `checkpoint` instead: lineage-free and
+    * executor-loss-safe, right for long multi-hour runs. Override with
     * `spark.graft.dedup.materialize` = persist | localCheckpoint |
-    * checkpoint (reliable; requires `sparkContext.setCheckpointDir`,
-    * executor-loss-safe — the right choice for long multi-hour runs). */
-  private def compactFrame(df: DataFrame, big: Boolean): DataFrame = {
-    if (!big) return df.persist()
+    * checkpoint. Blocks are freed by the ContextCleaner when the frames
+    * are GC'd. */
+  private def compactFrame(df: DataFrame): DataFrame = {
     val mode = df.sparkSession.conf.getOption("spark.graft.dedup.materialize")
       .getOrElse(if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
         "checkpoint" else "persist")
@@ -94,32 +81,6 @@ object Dedup {
           " cannot silently select a different materialization")
     }
   }
-
-  /** Partition count for the SMALL path's explicit exchanges. A small
-    * corpus (<64 MB) needs a few partitions for the signature pass's CPU,
-    * but NOT `shuffle.partitions` of them: at 32 partitions the wall is
-    * per-task dispatch overhead × tasks × stages, not work (measured ~0.9 s
-    * of a 2.5 s sf0.1 minhash run). 8 caps dispatch cost while keeping the
-    * only CPU-heavy leg parallel; override: `spark.graft.dedup.smallParts`. */
-  private def smallParts(df: DataFrame): Int = {
-    val dp = df.sparkSession.sparkContext.defaultParallelism
-    math.min(dp, df.sparkSession.conf.getOption("spark.graft.dedup.smallParts")
-      .map(_.toInt).getOrElse(8))
-  }
-
-  /** A small corpus usually arrives in ONE scan partition (a sub-128MB
-    * parquet file), so the signature pass — the pipeline's only CPU-heavy
-    * expression — would run as a single serial task. Spread it across
-    * [[smallParts]] partitions BY ROW ID (uniform), not by the content
-    * hash: hash-spreading sent every exact-duplicate row to ONE partition,
-    * so a boilerplate-heavy corpus (the mega-cluster case minhashPairs
-    * itself guards against) re-serialized the per-row signature CPU. The
-    * later group-bys on `__h` (rep collapse, group sizes) pay one more
-    * small exchange, but their partial aggregation collapses duplicate
-    * rows per partition BEFORE it, so the skewed case ships almost
-    * nothing. Big inputs already have partitions and pass through. */
-  private def spreadSmall(df: DataFrame, big: Boolean, byId: Column): DataFrame =
-    if (big) df else df.repartition(smallParts(df), byId)
 
   /** Exact duplicate groups by content hash: (text_hash, keeper_id, n). */
   def exact(df: DataFrame, text: Column, id: Column): DataFrame =
@@ -137,36 +98,44 @@ object Dedup {
    * MinHash+LSH near-duplicate candidate pairs, verified by exact n-gram
    * Jaccard. Returns (id_a, id_b, jaccard) with id_a < id_b and
    * jaccard >= threshold. numHashes=32, 8 bands x 4 rows targets ~0.6+
-   * similarity candidates.
-   *
-   * Scale shape: signatures are computed where the text lives (text never
-   * shuffles), then exact-duplicate groups collapse to ONE representative
-   * BEFORE banding — one group-by on the 16-byte content hash — so the band
-   * shuffle that feeds the self-join carries only (band:long, rid:long,
-   * __h:16B) rows. The r2 shape grouped (band, hex-string-hash, id) AFTER
-   * the band explode, shuffling ~2× the bytes through two exchanges (the
-   * (band,__h) group-by partitioning didn't match the window's
-   * partitionBy(band), costing a second full shuffle of the band frame) —
-   * the process-isolated scaling runs showed this join shuffle-volume-bound
-   * at 0.47 efficiency. Guards against degenerate buckets:
+   * similarity candidates. Guards against degenerate buckets:
    *  1. docs with fewer than `shingle` tokens have no shingle set, hence no
    *     meaningful Jaccard — excluded entirely (exact-dedup territory);
-   *  2. exact-duplicate texts occupy ONE band slot via the rep collapse
-   *     (see object doc) — a boilerplate mega-cluster can no longer
-   *     oversize buckets;
+   *  2. exact-duplicate texts occupy ONE band slot via the rep collapse;
    *  3. any band bucket still holding more than `maxBucket` DISTINCT texts
-   *     is dropped from candidate generation. On the big path the guard is
-   *     a broadcast ANTI join against the (near-empty) hot-band set — a
-   *     partially-aggregated count over the cached reps — so the band
-   *     frame stays unsorted and the self-join hash-joins it; the small
-   *     path keeps the window form, which rides its explicit smallParts
-   *     exchange for free.
+   *     is dropped from candidate generation.
+   *
+   * Small corpora: [[bucketPairs]] scores pairs by [[TextRT.sortedJaccard]]
+   * over each distinct text's shingle-hash set — the big path's value.
+   *
+   * Big corpora: signatures are computed where the text lives (text never
+   * shuffles) and the band shuffle that feeds the self-join carries only
+   * (band:long, rid:long) rows — the r2 shape that grouped after the band
+   * explode shuffled ~2× the bytes and ran shuffle-volume-bound at 0.47
+   * scaling efficiency. The bucket guard is a broadcast ANTI join against
+   * the (near-empty) hot-band set, so the self-join hash-joins the
+   * unsorted band frame.
    */
   def minhashPairs(df: DataFrame, textName: String, idName: String,
                    numHashes: Int = 32, rowsPerBand: Int = 4, shingle: Int = 3,
                    threshold: Double = 0.6, maxBucket: Long = 10000L): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val big = isBig(df)
+    if (!isBig(df)) {
+      // the signature is used twice, so Catalyst keeps it in its own
+      // projection (computed once); sub-shingle texts get null bands and
+      // drop out of the band explode
+      val reps = textGroups(df, textName, idName)
+        .select(col("rid"), col("__ids"),
+          tx.shingleHashes(col("__t"), lit(shingle)).as("__p"),
+          tx.minhash(col("__t"), lit(numHashes), lit(shingle)).as("__sig"))
+        .select(col("rid"), col("__ids"), col("__p"),
+          when(element_at(col("__sig"), 1) =!= lit(Long.MaxValue),
+            tx.lshBands(col("__sig"), lit(rowsPerBand))).as("__keys"))
+      return bucketPairs(reps, maxBucket, StructField("jaccard", DoubleType), 1.0,
+          _.getSeq[Long](4).toArray) { (a, b) =>
+        val j = TextRT.sortedJaccard(a, b)
+        if (j >= threshold) Some(j) else None
+      }
+    }
     val h = unhex(md5(col(textName).cast("binary"))) // 16-byte key, not hex string
     // ONE pass over the corpus computes everything per-doc (16-byte content
     // hash + 8 band keys ≈ 90 B/row, ~0.1% of the text bytes), materialized
@@ -174,15 +143,12 @@ object Dedup {
     // branches (banding, group sizes, expansion), and every branch — plus
     // every broadcast build — would otherwise re-scan the corpus and
     // re-hash every document (measured: 4-5 full corpus passes)
-    val base = compactFrame(spreadSmall(
-        df.select(col(idName).as("id"), h.as("__h"), col(textName).as("__t0")),
-        big, col("id"))
-      .select(col("id"), col("__h"),
-        (if (big) lit(null).cast("string") else col("__t0")).as("__text"),
-        tx.minhash(col("__t0"), lit(numHashes), lit(shingle)).as("__sig"))
-      .select(col("id"), col("__h"), col("__text"),
-        when(element_at(col("__sig"), 1) =!= lit(Long.MaxValue),
-          tx.lshBands(col("__sig"), lit(rowsPerBand))).as("__bands")), big)
+    val base = compactFrame(
+      df.select(col(idName).as("id"), h.as("__h"),
+          tx.minhash(col(textName), lit(numHashes), lit(shingle)).as("__sig"))
+        .select(col("id"), col("__h"),
+          when(element_at(col("__sig"), 1) =!= lit(Long.MaxValue),
+            tx.lshBands(col("__sig"), lit(rowsPerBand))).as("__bands")))
     val members = base.select("id", "__h")
     // identical texts have identical signatures hence identical bands, so
     // any group member's BAND ARRAY represents the group; sub-shingle docs
@@ -193,106 +159,93 @@ object Dedup {
     // below would compute the whole sig→collapse→band subtree TWICE
     // (measured 2.5x wall on the full pipeline); min over the struct is
     // deterministic (id is unique) and keeps ReusedExchange eligible.
-    // Small corpora carry the text through the collapse (id is the struct's
-    // leading field, so min() never compares text bytes) — see below.
     val reps = banded.groupBy("__h")
-      .agg(min(struct(col("id"), col("__bands"), col("__text"))).as("__m"))
-      .select(col("__m.id").as("rid"), col("__m.__bands").as("__bands"),
-        col("__m.__text").as("__rtext"))
-    // the band shuffle (the pipeline's dominant exchange at scale — the
-    // window count AND both self-join sides repartition on `band`) carries
-    // ONLY (band:long, rid:long): the 16-byte group hash is functionally
+      .agg(min(struct(col("id"), col("__bands"))).as("__m"))
+      .select(col("__m.id").as("rid"), col("__m.__bands").as("__bands"))
+    // the band shuffle (the pipeline's dominant exchange at scale — the hot
+    // count AND both self-join sides repartition on `band`) carries ONLY
+    // (band:long, rid:long): the 16-byte group hash is functionally
     // determined by rid and is re-attached AFTER candidate generation from
     // the compact cached frame — halving the exchange bytes vs shipping
     // __h through it (the r3 process-isolated scaling runs measured this
-    // join shuffle-volume-bound). SMALL corpora instead carry the text
-    // itself through the band shuffle: the two text re-join stages (each a
-    // serial broadcast build + exchange) dominate small-input latency, and
-    // a few hundred docs × 8 bands of text bytes cost nothing to shuffle.
-    val repPairs = if (big) {
-      val bands = reps.select(col("rid"), explode(col("__bands")).as("band"))
-      // bucket guard as a hot-band BROADCAST ANTI JOIN, not a window: the
-      // window rode the band exchange but forced a full SORT of the
-      // 8×-exploded band frame on every side; `> maxBucket` leaves a
-      // near-empty hot set, so a partially-aggregated count (map-side
-      // combine over the cached reps) costs one tiny shuffle and the
-      // self-join below can then HASH-join the unsorted band frame — the
-      // 32M-row sorts were a top-3 CPU stage of the 4M-doc pipeline
-      val hot = bands.groupBy("band").agg(count(lit(1)).as("__bc"))
-        .filter(col("__bc") > maxBucket).select("band")
-      val guarded = bands.join(broadcast(hot), Seq("band"), "left_anti")
-      // both join inputs are the same subtree — the band exchange is
-      // planned once and reused; SHUFFLE_HASH skips the per-side sorts
-      val candidates = compactFrame(guarded.as("a").hint("shuffle_hash")
-        .join(guarded.as("b"),
-          col("a.band") === col("b.band") && col("a.rid") < col("b.rid"))
-        .select(col("a.rid").as("rid_a"), col("b.rid").as("rid_b"))
-        .dropDuplicates("rid_a", "rid_b"), big)
-      // verify via PRE-SHINGLED sets: one corpus scan computes each
-      // candidate doc's sorted shingle-hash array (the semi join filters
-      // BEFORE the shingling projection, so only docs appearing in a
-      // candidate pair pay it, each exactly once); scoring a pair is then
-      // a linear merge of two sorted arrays. The per-pair ngram_jaccard
-      // alternative re-tokenized both texts for EVERY pair — a doc in k
-      // pairs paid the shingling k times, the pipeline's dominant CPU.
-      val ids = candidates.select(col("rid_a").as("__tid"))
-        .union(candidates.select(col("rid_b").as("__tid"))).distinct()
-      val sh = df.select(col(idName).as("__tid"), col(textName).as("__tx"))
-        .join(ids, Seq("__tid"), "left_semi")
-        .select(col("__tid"), tx.shingleHashes(col("__tx"), lit(shingle)).as("__sh"))
-      candidates
-        .join(sh.select(col("__tid").as("rid_a"), col("__sh").as("__sha")), Seq("rid_a"))
-        .join(sh.select(col("__tid").as("rid_b"), col("__sh").as("__shb")), Seq("rid_b"))
-        .withColumn("jaccard", tx.sortedJaccard(col("__sha"), col("__shb")))
-        .filter(col("jaccard") >= threshold)
-        .select(col("rid_a"), col("rid_b"), col("jaccard"))
-    } else {
-      // explicit smallParts exchanges (band, then pair keys): the window,
-      // BOTH self-join sides and the dedupe group-by all cluster on a
-      // subset of these keys, so Catalyst inserts no further exchange and
-      // no stage fans out to shuffle.partitions tasks — on a 5k-doc corpus
-      // the dispatch overhead of 32-task stages was ~40% of the wall
-      val bands = reps.select(col("rid"), col("__rtext"), explode(col("__bands")).as("band"))
-        .repartition(smallParts(df), col("band"))
-      val guarded = bands
-        .withColumn("__bc", count(lit(1)).over(Window.partitionBy("band")))
-        .filter(col("__bc") <= maxBucket).drop("__bc")
-      // jaccard is functionally determined by (rid_a, rid_b), so computing
-      // it before the dedupe is deterministic
-      guarded.as("a").join(guarded.as("b"),
-          col("a.band") === col("b.band") && col("a.rid") < col("b.rid"))
-        .select(col("a.rid").as("rid_a"), col("b.rid").as("rid_b"),
-          tx.ngramJaccard(col("a.__rtext"), col("b.__rtext"), lit(shingle)).as("jaccard"))
-        .filter(col("jaccard") >= threshold)
-        .repartition(smallParts(df), col("rid_a"), col("rid_b"))
-        .dropDuplicates("rid_a", "rid_b")
-    }
+    // join shuffle-volume-bound)
+    val bands = reps.select(col("rid"), explode(col("__bands")).as("band"))
+    // bucket guard as a hot-band BROADCAST ANTI JOIN, not a window: the
+    // window rode the band exchange but forced a full SORT of the
+    // 8×-exploded band frame on every side; `> maxBucket` leaves a
+    // near-empty hot set, so a partially-aggregated count (map-side
+    // combine over the cached reps) costs one tiny shuffle and the
+    // self-join below can then HASH-join the unsorted band frame — the
+    // 32M-row sorts were a top-3 CPU stage of the 4M-doc pipeline
+    val hot = bands.groupBy("band").agg(count(lit(1)).as("__bc"))
+      .filter(col("__bc") > maxBucket).select("band")
+    val guarded = bands.join(broadcast(hot), Seq("band"), "left_anti")
+    // both join inputs are the same subtree — the band exchange is
+    // planned once and reused; SHUFFLE_HASH skips the per-side sorts
+    val candidates = compactFrame(guarded.as("a").hint("shuffle_hash")
+      .join(guarded.as("b"),
+        col("a.band") === col("b.band") && col("a.rid") < col("b.rid"))
+      .select(col("a.rid").as("rid_a"), col("b.rid").as("rid_b"))
+      .dropDuplicates("rid_a", "rid_b"))
+    // verify via PRE-SHINGLED sets: one corpus scan computes each
+    // candidate doc's sorted shingle-hash array (the semi join filters
+    // BEFORE the shingling projection, so only docs appearing in a
+    // candidate pair pay it, each exactly once); scoring a pair is then
+    // a linear merge of two sorted arrays. The per-pair ngram_jaccard
+    // alternative re-tokenized both texts for EVERY pair — a doc in k
+    // pairs paid the shingling k times, the pipeline's dominant CPU.
+    val ids = candidates.select(col("rid_a").as("__tid"))
+      .union(candidates.select(col("rid_b").as("__tid"))).distinct()
+    val sh = df.select(col(idName).as("__tid"), col(textName).as("__tx"))
+      .join(ids, Seq("__tid"), "left_semi")
+      .select(col("__tid"), tx.shingleHashes(col("__tx"), lit(shingle)).as("__sh"))
+    val repPairs = candidates
+      .join(sh.select(col("__tid").as("rid_a"), col("__sh").as("__sha")), Seq("rid_a"))
+      .join(sh.select(col("__tid").as("rid_b"), col("__sh").as("__shb")), Seq("rid_b"))
+      .withColumn("jaccard", tx.sortedJaccard(col("__sha"), col("__shb")))
+      .filter(col("jaccard") >= threshold)
+      .select(col("rid_a"), col("rid_b"), col("jaccard"))
     // multi-member groups come straight off the materialized compact frame
     // (group members are byte-identical, so any member's bandability flag
     // is the group's) — a 24-byte-row group-by over cached blocks, never a
     // second corpus pass
     val multiHashes = multiGroupHashes(
-      base.select(col("__h"), col("__bands").isNotNull.as("__ok")), big)
-    expandGroups(members, multiHashes, repPairs, "jaccard", lit(1.0), big)
+      base.select(col("__h"), col("__bands").isNotNull.as("__ok")))
+    expandGroups(members, multiHashes, repPairs, "jaccard", lit(1.0))
   }
 
   /** SimHash near-dup pairs: bucket on rotated 16-bit blocks (any pair
    *  within hamming distance <= maxHamming shares at least one of the 4
-   *  blocks by pigeonhole), verify hamming. Same group-collapse +
-   *  windowed-bucket-guard shape as [[minhashPairs]]; sig == 0 (the
-   *  degenerate no-token signature of empty/whitespace pages) is excluded. */
+   *  blocks by pigeonhole), verify hamming. Same collapse and size fork as
+   *  [[minhashPairs]]: small corpora run [[bucketPairs]] on the signature;
+   *  big ones guard the blocks with a windowed count and self-join them.
+   *  sig == 0 (the no-token signature of empty/whitespace pages) is
+   *  excluded. */
   def simhashPairs(df: DataFrame, textName: String, idName: String,
                    maxHamming: Int = 3, maxBucket: Long = 10000L): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val big = isBig(df)
+    // ONE scan emits all 4 rotated blocks per row (no 4-way self-union);
+    // block key is a LONG — bits 0..15 the slice, bits 16..17 the slice
+    // index (disjoint keyspace per block, no string concat in the shuffle)
+    def blockKeys(sig: Column) = array((0 until 4).map { b =>
+      shiftright(sig, b * 16).bitwiseAND(lit(0xffffL)).bitwiseOR(lit(b.toLong << 16))
+    }: _*)
+    if (!isBig(df)) {
+      val reps = textGroups(df, textName, idName)
+        .select(col("rid"), col("__ids"), tx.simhash(col("__t")).as("__p"))
+        .withColumn("__keys", when(col("__p") =!= 0L, blockKeys(col("__p"))))
+      return bucketPairs(reps, maxBucket, StructField("hamming", IntegerType), 0,
+          _.getLong(4)) { (a, b) =>
+        val d = TextRT.hammingDist(a, b)
+        if (d <= maxHamming) Some(d) else None
+      }
+    }
     val h = unhex(md5(col(textName).cast("binary"))) // 16-byte key, not hex string
     // one corpus pass, materialized per the object-doc policy (32 B/row) —
     // same rationale as minhashPairs: the DAG fans out and every
     // branch/broadcast build would re-scan and re-hash the corpus otherwise
-    val base = compactFrame(spreadSmall(
-        df.select(col(idName).as("id"), h.as("__h"), col(textName).as("__t0")),
-        big, col("id"))
-      .select(col("id"), col("__h"), tx.simhash(col("__t0")).as("sig")), big)
+    val base = compactFrame(
+      df.select(col(idName).as("id"), h.as("__h"), tx.simhash(col(textName)).as("sig")))
     val members = base.select("id", "__h")
     val sigs = base.filter(col("sig") =!= 0L)
     // identical texts share the signature: collapse to one representative
@@ -302,60 +255,98 @@ object Dedup {
     val reps = sigs.groupBy("__h")
       .agg(min(struct(col("id"), col("sig"))).as("__m"))
       .select(col("__m.id").as("rid"), col("__m.sig").as("rsig"))
-    // ONE scan emits all 4 rotated blocks per row (no 4-way self-union);
-    // block key is a LONG — bits 0..15 the slice, bits 16..17 the slice
-    // index (disjoint keyspace per block, no string concat in the shuffle).
     // The block shuffle carries ONLY (block:long, rid:long) — the 16-byte
     // group hash and the 8-byte signature are functionally determined by
     // rid and re-attached after candidate generation (same shuffle-slimming
     // as minhashPairs; rid→rsig comes from the tiny `reps` frame, a
     // group-by over cached base blocks)
-    val blockArr = array((0 until 4).map { b =>
-      shiftright(col("rsig"), b * 16).bitwiseAND(lit(0xffffL))
-        .bitwiseOR(lit(b.toLong << 16))
-    }: _*)
-    // big corpora slim the block shuffle to (block, rid) and re-attach the
-    // signature via two equi-joins on the tiny reps frame; SMALL corpora
-    // carry the 8-byte rsig through the shuffle instead — the two join
-    // stages (each a serial broadcast build + exchange) dominate small-
-    // input latency, and doubling a 16-byte row on 500 docs costs nothing
-    val blocks =
-      if (big) reps.select(col("rid"), explode(blockArr).as("block"))
-      // explicit smallParts exchange on the block key — the window and both
-      // self-join sides reuse it (same dispatch-overhead rationale as the
-      // minhash small path)
-      else reps.select(col("rid"), col("rsig"), explode(blockArr).as("block"))
-        .repartition(smallParts(df), col("block"))
+    val blocks = reps.select(col("rid"), explode(blockKeys(col("rsig"))).as("block"))
     val guarded = blocks
       .withColumn("__bc", count(lit(1)).over(Window.partitionBy("block")))
       .filter(col("__bc") <= maxBucket).drop("__bc")
     // one rep per group hash ⇒ (rid_a, rid_b) dedupe ≡ the old (ha, hb) one
-    val repPairs = if (big) {
-      val candidates = guarded.as("a").join(guarded.as("b"),
-          col("a.block") === col("b.block") && col("a.rid") < col("b.rid"))
-        .select(col("a.rid").as("rid_a"), col("b.rid").as("rid_b"))
-        .dropDuplicates("rid_a", "rid_b")
-      val lut = reps
-      candidates
-        .join(lut.select(col("rid").as("rid_a"), col("rsig").as("sig_a")), Seq("rid_a"))
-        .join(lut.select(col("rid").as("rid_b"), col("rsig").as("sig_b")), Seq("rid_b"))
-        .withColumn("hamming", tx.hamming(col("sig_a"), col("sig_b")))
-        .filter(col("hamming") <= maxHamming)
-        .select("rid_a", "rid_b", "hamming")
-    } else {
-      // hamming is functionally determined by (rid_a, rid_b), so computing
-      // it before the dedupe is deterministic
-      guarded.as("a").join(guarded.as("b"),
-          col("a.block") === col("b.block") && col("a.rid") < col("b.rid"))
-        .select(col("a.rid").as("rid_a"), col("b.rid").as("rid_b"),
-          tx.hamming(col("a.rsig"), col("b.rsig")).as("hamming"))
-        .filter(col("hamming") <= maxHamming)
-        .repartition(smallParts(df), col("rid_a"), col("rid_b"))
-        .dropDuplicates("rid_a", "rid_b")
-    }
+    val candidates = guarded.as("a").join(guarded.as("b"),
+        col("a.block") === col("b.block") && col("a.rid") < col("b.rid"))
+      .select(col("a.rid").as("rid_a"), col("b.rid").as("rid_b"))
+      .dropDuplicates("rid_a", "rid_b")
+    val repPairs = candidates
+      .join(reps.select(col("rid").as("rid_a"), col("rsig").as("sig_a")), Seq("rid_a"))
+      .join(reps.select(col("rid").as("rid_b"), col("rsig").as("sig_b")), Seq("rid_b"))
+      .withColumn("hamming", tx.hamming(col("sig_a"), col("sig_b")))
+      .filter(col("hamming") <= maxHamming)
+      .select("rid_a", "rid_b", "hamming")
     val multiHashes = multiGroupHashes(
-      base.select(col("__h"), (col("sig") =!= 0L).as("__ok")), big)
-    expandGroups(members, multiHashes, repPairs, "hamming", lit(0), big)
+      base.select(col("__h"), (col("sig") =!= 0L).as("__ok")))
+    expandGroups(members, multiHashes, repPairs, "hamming", lit(0))
+  }
+
+  /** The small path's exact-text collapse: one row per distinct content
+    * hash with its text `__t`, its non-null member ids `__ids` and its
+    * representative `rid` — the min id, nulls FIRST, as the big path's
+    * min(struct) picks it. One exchange by hash into defaultParallelism
+    * partitions spreads the per-text kernels that follow: a small corpus
+    * is often one scan partition, and adaptive execution would coalesce a
+    * plain group-by's output back into one task. */
+  private def textGroups(df: DataFrame, textName: String, idName: String): DataFrame =
+    df.select(col(idName).as("rid"), col(textName).as("__t"),
+        unhex(md5(col(textName).cast("binary"))).as("__h"))
+      .repartition(df.sparkSession.sparkContext.defaultParallelism, col("__h"))
+      .groupBy("__h")
+      .agg(min(struct(col("rid"), col("__t"))).as("__m"), collect_list(col("rid")).as("__ids"))
+      .select(col("__m.rid").as("rid"), col("__ids"), col("__m.__t").as("__t"))
+
+  /**
+   * Near-duplicate pairs of a small corpus through ONE band exchange.
+   * `reps` holds one row per distinct text: rid, __ids, a payload __p and
+   * __keys, its bucket keys (null when the text cannot band). Rows explode
+   * to (key index, key) and group by key; each bucket then
+   *  - emits the within-group pairs of its texts (similarity `withinSim`)
+   *    if its key index is 0, whatever its size: every text has exactly one
+   *    index-0 key, so each such pair is emitted once;
+   *  - buffers at most `maxBucket` texts: a bucket of more DISTINCT texts
+   *    emits no cross pairs (the big path's guard) and memory stays bounded;
+   *  - scores each buffered pair of texts and expands a `Some(similarity)`
+   *    to all pairs of their member ids. A text whose rid is null pairs
+   *    with no other text, as on the big path.
+   * One `dropDuplicates` removes the pairs that meet in several buckets.
+   * Returns (id_a, id_b, <sim>) with id_a < id_b in the ids' type.
+   */
+  private def bucketPairs[P](reps: DataFrame, maxBucket: Long, sim: StructField,
+                             withinSim: Any, payload: Row => P)
+                            (score: (P, P) => Option[Any]): DataFrame = {
+    val idType = reps.schema("rid").dataType
+    val pairType = StructType(Seq(StructField("a", idType), StructField("b", idType), sim))
+    // posexplode_OUTER plus a filter on its output: Catalyst infers a
+    // size(__keys) > 0 filter from a plain posexplode, pushes it below the
+    // projection that runs the kernels and so ran every kernel twice or more
+    reps.select(posexplode_outer(col("__keys")).as(Seq("__i", "__key")), col("rid"),
+        col("__ids"), col("__p"))
+      .filter(col("__key").isNotNull)
+      .groupByKey((r: Row) => r.getLong(1))(Encoders.scalaLong)
+      .flatMapGroups { (_: Long, rows: Iterator[Row]) =>
+        val kept = scala.collection.mutable.ArrayBuffer.empty[(Array[Any], P)]
+        var n = 0L
+        val within = rows.flatMap { r =>
+          val ids = r.getSeq[Any](3).toArray
+          n += 1
+          if (n > maxBucket) kept.clear()
+          else if (!r.isNullAt(2)) kept += ((ids, payload(r)))
+          if (r.getInt(0) != 0) Iterator.empty
+          else ids.combinations(2).map(p => (p(0), p(1), withinSim))
+        }
+        // runs once `within` has consumed the bucket
+        def cross = for {
+          i <- kept.indices.iterator
+          j <- (i + 1 until kept.length).iterator
+          s <- score(kept(i)._2, kept(j)._2).iterator
+          a <- kept(i)._1.iterator
+          b <- kept(j)._1.iterator
+        } yield (a, b, s)
+        (within ++ cross).collect { case (a, b, s) if a != b => Row(a, b, s) }
+      }(Encoders.row(pairType))
+      .select(least(col("a"), col("b")).as("id_a"), greatest(col("a"), col("b")).as("id_b"),
+        col(sim.name))
+      .dropDuplicates("id_a", "id_b")
   }
 
   /** Group hashes with ≥2 members whose (byte-identical) members banded —
@@ -363,11 +354,11 @@ object Dedup {
     * over the caller's materialized frame; materialized itself (one tiny
     * row per multi-member group) because it is rebuilt inside every
     * downstream broadcast build and its emptiness steers the expansion. */
-  private def multiGroupHashes(flagged: DataFrame, big: Boolean): DataFrame =
+  private def multiGroupHashes(flagged: DataFrame): DataFrame =
     compactFrame(flagged.groupBy("__h")
       .agg(count(lit(1)).as("__g"), min(col("__ok")).as("__ok"))
       .filter(col("__g") >= 2 && col("__ok"))
-      .select("__h"), big)
+      .select("__h"))
 
   /**
    * Expand verified representative pairs back to member-id pairs:
@@ -386,7 +377,7 @@ object Dedup {
    */
   private def expandGroups(members: DataFrame, multiHashes: DataFrame,
                            repPairs: DataFrame, simName: String,
-                           withinSim: Column, big: Boolean): DataFrame = {
+                           withinSim: Column): DataFrame = {
     // multiHashes arrives materialized (tiny), so its emptiness is a free
     // driver-side fact: a mostly-unique corpus — the common case — has no
     // multi-member groups, every representative is its group's only
@@ -409,7 +400,7 @@ object Dedup {
     // multiHashes is a group-by output — already distinct; a .distinct()
     // here would be a whole extra exchange+aggregate for nothing
     val m2 = compactFrame(
-      members.join(multiHashes, Seq("__h"), "left_semi"), big)
+      members.join(multiHashes, Seq("__h"), "left_semi"))
     val within = m2.as("x").join(m2.as("y"),
         col("x.__h") === col("y.__h") && col("x.id") < col("y.id"))
       .select(col("x.id").as("id_a"), col("y.id").as("id_b"), withinSim.as(simName))
