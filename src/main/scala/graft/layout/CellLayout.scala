@@ -4,11 +4,19 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import graft.functions.st
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Expression, Predicate}
+import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, MapType, StructField, StructType}
+import org.json4s._
+import org.json4s.jackson.JsonMethods
 
 /**
  * Physical layout + checkpointed write path — the Spark-native analog of the
@@ -20,22 +28,31 @@ import org.apache.spark.sql.functions._
  *     bucket=<coarse cell>/part-*.parquet   — directory partition = coarse
  *                                             Z2 cell (partition pruning =
  *                                             Accumulo range pruning)
- *     _graft_manifest.json                  — snapshot manifest: per-bucket
- *                                             lineage + row/byte metrics
+ *     _graft_manifest.json                  — the table's catalog: the read
+ *                                             schema, and per bucket its
+ *                                             files (relative path + bytes),
+ *                                             lineage and row/byte metrics
  *     _graft_snapshots/v00001.json …        — immutable snapshot history
  *                                             (one per wave checkpoint);
  *                                             read(snapshot = Some(v))
  *                                             time-travels, Iceberg-style
  *
- * Rows inside each bucket are range-partitioned and sorted by the FULL cell
- * key + salt, so parquet row-group min/max stats prune within a bucket the
- * way sorted Accumulo tablets do.
+ * Reads plan from the manifest alone, as GeoMesa plans key ranges from
+ * catalog metadata: no directory listing, no schema inference, no Spark
+ * job. A reader sees committed buckets only — a directory that a killed
+ * write appended but never checkpointed is invisible until the resume
+ * replaces it.
+ *
+ * Rows inside each bucket are hash-partitioned on (bucket, salt) and sorted
+ * by bucket, salt and the FULL cell key, so parquet row-group min/max stats
+ * prune within a bucket the way sorted Accumulo tablets do.
  *
  * Resumability (north rule): the write runs in WAVES of buckets; each
  * completed wave appends its buckets to the manifest atomically
  * (write-temp + rename). A killed job resumes by re-running only the
  * buckets missing from the manifest — inputs are re-read but completed
- * output buckets are never rewritten.
+ * output buckets are never rewritten. A resume whose frame's schema differs
+ * from the recorded one is refused before any wave runs.
  */
 object CellLayout {
 
@@ -49,8 +66,16 @@ object CellLayout {
   /** Fine sort-key resolution within files. */
   val SortRes = 14
 
-  case class BucketMeta(bucket: Long, rows: Long, bytes: Long, files: Int,
-                        wave: Int, inputPath: String, wallMs: Long)
+  /** One parquet file of a bucket: path relative to the table root. */
+  case class DataFile(path: String, bytes: Long)
+
+  case class BucketMeta(bucket: Long, rows: Long, bytes: Long, wave: Int,
+                        inputPath: String, wallMs: Long, dataFiles: Seq[DataFile]) {
+    def files: Int = dataFiles.size
+  }
+
+  /** A manifest version: the table's read schema and its committed buckets. */
+  private case class Manifest(schema: StructType, buckets: Map[Long, BucketMeta])
 
   /** Projection: add `cell` (fine Z2 key), `bucket` (coarse ancestor) and
     * `salt` (hot-cell spreader: stable per-row hash mod `salts`). */
@@ -69,7 +94,7 @@ object CellLayout {
     withCellKeys(df, lon, lat, idCol, salts)
       .withColumn("day", (epochSec / lit(86400L)).cast("long"))
 
-  // ---- manifest I/O (tiny hand-rolled JSON; no extra deps) ----
+  // ---- manifest I/O (json4s, on the classpath through Spark) ----
 
   private def manifestPath(outDir: String) = Paths.get(outDir, "_graft_manifest.json")
   private def snapshotDir(outDir: String) = Paths.get(outDir, "_graft_snapshots")
@@ -93,36 +118,54 @@ object CellLayout {
     * once and never rewritten after their manifest entry commits, so the
     * bucket set of snapshot v reconstructs that state exactly. */
   def readManifest(outDir: String, snapshot: Option[Int]): Map[Long, BucketMeta] =
-    snapshot match {
-      case None => readManifest(outDir)
+    loadManifest(outDir, snapshot).fold(Map.empty[Long, BucketMeta])(_.buckets)
+
+  def readManifest(outDir: String): Map[Long, BucketMeta] = readManifest(outDir, None)
+
+  /** The current manifest (None when the table has none yet), or snapshot v. */
+  private def loadManifest(outDir: String, snapshot: Option[Int]): Option[Manifest] = {
+    val p = snapshot match {
+      case None => manifestPath(outDir)
       case Some(v) =>
         require(Files.exists(snapshotPath(outDir, v)), s"no snapshot v$v in $outDir")
-        parseManifest(new String(Files.readAllBytes(snapshotPath(outDir, v)), StandardCharsets.UTF_8))
+        snapshotPath(outDir, v)
     }
-
-  def readManifest(outDir: String): Map[Long, BucketMeta] = {
-    val p = manifestPath(outDir)
-    if (!Files.exists(p)) return Map.empty
-    parseManifest(new String(Files.readAllBytes(p), StandardCharsets.UTF_8))
+    if (!Files.exists(p)) None
+    else Some(parseManifest(new String(Files.readAllBytes(p), StandardCharsets.UTF_8), p.toString))
   }
 
-  private def parseManifest(txt: String): Map[Long, BucketMeta] = {
-    // lines of: {"bucket":1,"rows":2,"bytes":3,"files":1,"wave":0,"input":"...","wallMs":5}
-    txt.linesIterator.filter(_.contains("\"bucket\"")).map { line =>
-      def lng(k: String): Long =
-        s""""$k":(-?\\d+)""".r.findFirstMatchIn(line).map(_.group(1).toLong).getOrElse(0L)
-      def str(k: String): String =
-        s""""$k":"([^"]*)"""".r.findFirstMatchIn(line).map(_.group(1)).getOrElse("")
-      val m = BucketMeta(lng("bucket"), lng("rows"), lng("bytes"), lng("files").toInt,
-        lng("wave").toInt, str("input"), lng("wallMs"))
-      m.bucket -> m
-    }.toMap
+  private def parseManifest(txt: String, at: String): Manifest = {
+    def long(j: JValue): Long = j match {
+      case JInt(v) => v.toLong
+      case other => throw new IllegalStateException(s"$at: expected a number, found $other")
+    }
+    def str(j: JValue): String = j match {
+      case JString(v) => v
+      case other => throw new IllegalStateException(s"$at: expected a string, found $other")
+    }
+    JsonMethods.parse(txt) match {
+      case o: JObject if (o \ "schema") != JNothing =>
+        val schema = DataType.fromJson(JsonMethods.compact(o \ "schema")).asInstanceOf[StructType]
+        Manifest(schema, (o \ "buckets").children.map { b =>
+          val m = BucketMeta(long(b \ "bucket"), long(b \ "rows"), long(b \ "bytes"),
+            long(b \ "wave").toInt, str(b \ "input"), long(b \ "wallMs"),
+            (b \ "files").children.map(f => DataFile(str(f \ "path"), long(f \ "bytes"))))
+          m.bucket -> m
+        }.toMap)
+      case _ => throw new IllegalStateException(
+        s"$at predates the recorded schema and per-bucket file lists; rewrite the table")
+    }
   }
 
-  private def writeManifest(outDir: String, metas: Map[Long, BucketMeta]): Unit = {
-    val body = metas.values.toSeq.sortBy(_.bucket).map { m =>
-      s"""{"bucket":${m.bucket},"rows":${m.rows},"bytes":${m.bytes},"files":${m.files},"wave":${m.wave},"input":"${m.inputPath}","wallMs":${m.wallMs}}"""
-    }.mkString("[\n", ",\n", "\n]")
+  private def writeManifest(outDir: String, m: Manifest): Unit = {
+    val buckets = m.buckets.values.toList.sortBy(_.bucket).map { b =>
+      JObject("bucket" -> JLong(b.bucket), "rows" -> JLong(b.rows), "bytes" -> JLong(b.bytes),
+        "wave" -> JLong(b.wave), "input" -> JString(b.inputPath), "wallMs" -> JLong(b.wallMs),
+        "files" -> JArray(b.dataFiles.toList.map(f =>
+          JObject("path" -> JString(f.path), "bytes" -> JLong(f.bytes)))))
+    }
+    val body = JsonMethods.compact(JObject(
+      "schema" -> JsonMethods.parse(m.schema.json), "buckets" -> JArray(buckets)))
     val tmp = Paths.get(outDir, "_graft_manifest.json.tmp")
     Files.createDirectories(Paths.get(outDir))
     Files.write(tmp, body.getBytes(StandardCharsets.UTF_8))
@@ -134,6 +177,39 @@ object CellLayout {
     Files.write(snapshotPath(outDir, v), body.getBytes(StandardCharsets.UTF_8))
     Files.move(tmp, manifestPath(outDir), StandardCopyOption.ATOMIC_MOVE,
       StandardCopyOption.REPLACE_EXISTING)
+  }
+
+  // ---- schema ----
+
+  private def partitionColumns(columns: Seq[String]): Seq[String] =
+    if (columns.contains("day")) Seq("day", "bucket") else Seq("bucket")
+
+  /** The schema a reader sees: the data columns as a parquet scan reports
+    * them (nullable), then the partition columns typed as Spark's directory
+    * inference types them (`day`, `bucket` int). */
+  private def readSchema(df: StructType): StructType = {
+    def nullable(t: DataType): DataType = t match {
+      case s: StructType => StructType(s.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+      case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+      case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
+      case other => other
+    }
+    val parts = partitionColumns(df.fieldNames.toSeq)
+    StructType(df.fields.filterNot(f => parts.contains(f.name))
+      .map(f => f.copy(dataType = nullable(f.dataType), nullable = true)) ++
+      parts.map(StructField(_, IntegerType)))
+  }
+
+  /** Refuse to append files of another schema to a table: the first column
+    * (by name) whose type differs or that one side lacks fails the write. */
+  private def requireSameSchema(outDir: String, recorded: StructType, incoming: StructType): Unit = {
+    val r = recorded.fields.map(f => f.name -> f.dataType).toMap
+    val i = incoming.fields.map(f => f.name -> f.dataType).toMap
+    def show(t: Option[DataType]) = t.fold("absent")(_.simpleString)
+    (recorded.fieldNames ++ incoming.fieldNames).distinct.find(n => r.get(n) != i.get(n)).foreach { n =>
+      throw new IllegalArgumentException(s"schema drift: column `$n` is ${show(r.get(n))} in " +
+        s"$outDir but ${show(i.get(n))} in the frame being written; write to a new directory")
+    }
   }
 
   /**
@@ -148,14 +224,18 @@ object CellLayout {
     val hadoopConf = df.sparkSession.sessionState.newHadoopConf()
     require(Seq("cell", "bucket", "salt").forall(df.columns.contains),
       "call withCellKeys first")
+    val schema = readSchema(df.schema)
+    val prior = loadManifest(outDir, None)
+    prior.foreach(m => requireSameSchema(outDir, m.schema, schema))
 
-    val done = readManifest(outDir)
+    val done = prior.fold(Map.empty[Long, BucketMeta])(_.buckets)
     val allBuckets = df.select("bucket").distinct().collect().map(_.getLong(0)).sorted
     val pending = allBuckets.filterNot(done.contains)
     if (pending.isEmpty) return done
 
     val waveOf = pending.zipWithIndex.map { case (b, i) => b -> i % waves }.toMap
     val waveIds = waveOf.values.toSeq.distinct.sorted.take(maxWaves)
+    val root = Paths.get(outDir)
 
     var manifest = done
     waveIds.foreach { w =>
@@ -168,38 +248,40 @@ object CellLayout {
       deleteBucketDirs(outDir, bs)
       val t0 = System.nanoTime()
       val wave = df.filter(col("bucket").isin(bs: _*))
-        // range-partition on (bucket, salt, cell): hot buckets spread over
-        // `salts` tasks, rows arrive sorted for row-group min/max locality
-        .repartitionByRange(col("bucket"), col("salt"), col("cell"))
+        // hash-partition on (bucket, salt): a hot bucket spreads over
+        // `salts` tasks with no sampling job (AQE still coalesces the
+        // partitions); the sort gives row-group min/max locality on `cell`
+        .repartition(col("bucket"), col("salt"))
         .sortWithinPartitions("bucket", "salt", "cell")
-      val partCols = if (df.columns.contains("day")) Seq("day", "bucket") else Seq("bucket")
-      wave.write.mode("append").partitionBy(partCols: _*).parquet(outDir)
+      wave.write.mode("append").partitionBy(partitionColumns(df.columns.toSeq): _*).parquet(outDir)
       val wallMs = (System.nanoTime() - t0) / 1000000
 
-      // per-bucket metrics from the written files (lineage: input → bucket)
-      // ONE walk per wave (bucket dirs may nest under day=… partitions):
-      // group the parquet files by their bucket dir — a per-bucket walk
-      // would be O(buckets × files) driver-side at cluster bucket counts
-      val byBucket: Map[Long, Array[String]] = {
-        val walk = Files.walk(Paths.get(outDir))
-        val files = try walk.toArray.map(_.toString).filter(_.endsWith(".parquet"))
+      // per-bucket files and metrics from the written files (lineage:
+      // input → bucket). ONE walk per wave (bucket dirs may nest under
+      // day=… partitions): group the parquet files by their bucket dir — a
+      // per-bucket walk would be O(buckets × files) driver-side at cluster
+      // bucket counts
+      val byBucket: Map[Long, Array[java.nio.file.Path]] = {
+        val walk = Files.walk(root)
+        val files = try walk.toArray.map(_.asInstanceOf[java.nio.file.Path])
+          .filter(_.getFileName.toString.endsWith(".parquet"))
         finally walk.close()
         val pat = java.util.regex.Pattern.compile("bucket=(\\d+)/")
         files.flatMap { f =>
-          val m = pat.matcher(f)
+          val m = pat.matcher(f.toString)
           if (m.find()) Some(m.group(1).toLong -> f) else None
-        }.groupBy(_._1).map { case (b, fs) => b -> fs.map(_._2) }
+        }.groupBy(_._1).map { case (b, fs) => b -> fs.map(_._2).sortBy(_.toString) }
       }
       bs.foreach { b =>
         val files = byBucket.getOrElse(b, Array.empty)
-        val bytes = files.map(f => Files.size(Paths.get(f))).sum
+        val dataFiles = files.map(f => DataFile(root.relativize(f).toString, Files.size(f))).toSeq
         val rows = files.map { f =>
-          val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f), hadoopConf))
+          val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f.toString), hadoopConf))
           try r.getRecordCount finally r.close()
         }.sum
-        manifest += b -> BucketMeta(b, rows, bytes, files.length, w, inputPath, wallMs)
+        manifest += b -> BucketMeta(b, rows, dataFiles.map(_.bytes).sum, w, inputPath, wallMs, dataFiles)
       }
-      writeManifest(outDir, manifest) // atomic checkpoint after each wave
+      writeManifest(outDir, Manifest(schema, manifest)) // atomic checkpoint after each wave
     }
     manifest
   }
@@ -223,39 +305,38 @@ object CellLayout {
     }
   }
 
-  /** Read a cell table back; `queryBox` prunes directory partitions via the
-    * coarse bucket cover (partition pruning ≙ Accumulo ranges). `snapshot`
-    * time-travels to an earlier manifest version: buckets are append-once,
-    * so restricting the scan to the snapshot's bucket set (a partition
-    * filter) reconstructs that state exactly — Iceberg-style snapshot
-    * isolation without rewriting data. */
+  /** Read a cell table back from its manifest: the scan gets the recorded
+    * schema and the files of the manifest's buckets — with a `queryBox`,
+    * only the buckets its coarse cover hits (partition pruning ≙ Accumulo
+    * ranges). `snapshot` time-travels to an earlier manifest version:
+    * buckets are append-once, so that version's files reconstruct its state
+    * exactly — Iceberg-style snapshot isolation without rewriting data.
+    * Planning lists nothing and runs no Spark job at any file count. */
   def read(spark: SparkSession, outDir: String,
            queryBox: Option[(Double, Double, Double, Double)] = None,
            dayRange: Option[(Long, Long)] = None,
            snapshot: Option[Int] = None): DataFrame = {
-    val manifest = readManifest(outDir, snapshot)
-    val df0 = spark.read.parquet(outDir)
-    val snapped = snapshot match {
-      // raw int-typed partition column keeps this a PartitionFilter
-      case Some(_) => df0.filter(col("bucket").isin(manifest.keysIterator.map(_.toInt).toSeq: _*))
-      case None => df0
-    }
-    val df = dayRange match {
-      case Some((d0, d1)) if snapped.columns.contains("day") =>
-        snapped.filter(col("day") >= d0 && col("day") <= d1)
-      case _ => snapped
-    }
+    val manifest = loadManifest(outDir, snapshot)
+      .getOrElse(throw new IllegalArgumentException(s"no layout manifest in $outDir"))
     // the written bucket resolution rides inside the packed ids — read it
     // from the manifest so tables written at a coarser bucketRes (small
     // tables, tests) prune correctly without out-of-band metadata
-    val bucketRes = manifest.keysIterator
+    val bucketRes = manifest.buckets.keysIterator
       .map(graft.index.Z2.resOf).nextOption().getOrElse(BucketRes)
-    val pruned = queryBox match {
-      case Some((x0, y0, x1, y1)) =>
-        // filter the RAW partition column (int-typed from dir inference) so
-        // the predicate stays a PartitionFilter — filtering through a cast
-        // can defeat directory pruning
-        val cover = graft.index.Z2.coverBBox(x0, y0, x1, y1, bucketRes).map(_.toInt)
+    val cover = queryBox.map { case (x0, y0, x1, y1) => graft.index.Z2.coverBBox(x0, y0, x1, y1, bucketRes) }
+    val metas = cover.fold(manifest.buckets.values.toSeq)(_.toSeq.flatMap(manifest.buckets.get))
+    val df0 = spark.baseRelationToDataFrame(relation(spark, outDir, manifest.schema, metas))
+    val df = dayRange match {
+      case Some((d0, d1)) if df0.columns.contains("day") =>
+        df0.filter(col("day") >= d0 && col("day") <= d1)
+      case _ => df0
+    }
+    val pruned = (queryBox, cover) match {
+      case (Some((x0, y0, x1, y1)), Some(cells)) =>
+        // filter the RAW partition column (int-typed, as directory inference
+        // types it) so the predicate stays a PartitionFilter — filtering
+        // through a cast can defeat directory pruning
+        val buckets = cells.toSeq.map(_.toInt)
         // fine-cell range conjuncts on the SORTED in-file key: the bbox
         // cover at a finer resolution expands to `cell BETWEEN` ranges that
         // parquet row-group min/max stats prune INSIDE hot buckets — the
@@ -269,10 +350,57 @@ object CellLayout {
         val rangeFilter = ranges.map { case (lo, hi) =>
           col("cell") >= lo && col("cell") <= hi
         }.reduce(_ || _)
-        df.filter(col("bucket").isin(cover: _*)).filter(rangeFilter)
-      case None => df
+        df.filter(col("bucket").isin(buckets: _*)).filter(rangeFilter)
+      case _ => df
     }
     pruned.withColumn("bucket", col("bucket").cast("long"))
+  }
+
+  /** A parquet relation over the given buckets' manifest files: one
+    * partition directory per bucket dir, its values parsed from the
+    * `name=value` segments of the recorded relative paths. */
+  private def relation(spark: SparkSession, outDir: String, schema: StructType,
+                       metas: Seq[BucketMeta]): HadoopFsRelation = {
+    val partNames = partitionColumns(schema.fieldNames.toSeq)
+    val parts = StructType(schema.filter(f => partNames.contains(f.name)))
+    val root = new Path(Paths.get(outDir).toAbsolutePath.toUri)
+    val dirs = metas.flatMap(_.dataFiles).groupBy(f => f.path.substring(0, f.path.lastIndexOf('/')))
+      .toSeq.sortBy(_._1).map { case (dir, files) =>
+        val kv = dir.split('/').map(_.split("=", 2)).collect { case Array(k, v) => k -> v }.toMap
+        val values = parts.fieldNames.map { n =>
+          val v = kv.getOrElse(n, throw new IllegalStateException(s"$outDir/$dir has no `$n=` segment"))
+          if (v == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) null else Int.box(v.toInt)
+        }
+        PartitionDirectory(InternalRow.fromSeq(values.toSeq), files.map(f =>
+          new FileStatus(f.bytes, false, 0, 1, 0, new Path(root, f.path))).toArray)
+      }
+    HadoopFsRelation(new ManifestFileIndex(root, parts, dirs), parts,
+      StructType(schema.filterNot(f => partNames.contains(f.name))),
+      None, new ParquetFileFormat, Map.empty)(spark)
+  }
+
+  /** The files of a manifest read, handed to Spark as they are — the way
+    * Delta and Iceberg hand over theirs: no listing, and so no parallel
+    * listing job past `parallelPartitionDiscovery.threshold` paths.
+    * Partition filters prune the directories here, as Spark's own
+    * partition-aware index does. */
+  private class ManifestFileIndex(root: Path, val partitionSchema: StructType,
+                                  dirs: Seq[PartitionDirectory]) extends FileIndex {
+    override def rootPaths: Seq[Path] = Seq(root)
+    override def listFiles(partitionFilters: Seq[Expression],
+                           dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+      partitionFilters.reduceOption(And) match {
+        case None => dirs
+        case Some(f) =>
+          val keep = Predicate.createInterpreted(f.transform { case a: AttributeReference =>
+            val i = partitionSchema.fieldIndex(a.name)
+            BoundReference(i, partitionSchema(i).dataType, nullable = true)
+          })
+          dirs.filter(d => keep.eval(d.values))
+      }
+    override def inputFiles: Array[String] = dirs.flatMap(_.files.map(_.getPath.toString)).toArray
+    override def refresh(): Unit = ()
+    override def sizeInBytes: Long = dirs.flatMap(_.files.map(_.getLen)).sum
   }
 
   /**

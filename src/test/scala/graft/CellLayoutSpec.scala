@@ -231,4 +231,28 @@ class CellLayoutSpec extends SparkSpec {
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(snapBox.subsetOf(fullBox))
   }
+
+  test("readers see committed buckets only: an un-manifested bucket dir is invisible") {
+    val out = freshDir()
+    val partial = CellLayout.write(keyedPages, out, sfDir, waves = 4, maxWaves = 1)
+    // the crash window: a pending bucket appended, the checkpoint never written
+    val crashed = keyedPages.select("bucket").distinct().collect().map(_.getLong(0))
+      .filterNot(partial.contains).head
+    keyedPages.filter(col("bucket") === crashed)
+      .write.mode("append").partitionBy("bucket").parquet(out)
+    assert(CellLayout.read(spark, out).count() === CellLayout.countEstimate(out))
+    assert(CellLayout.read(spark, out).filter(col("bucket") === crashed).count() === 0)
+  }
+
+  test("a file the manifest names but the disk lacks fails the read, naming the file") {
+    val out = freshDir()
+    val manifest = CellLayout.write(keyedPages, out, sfDir)
+    val gone = manifest.values.head.dataFiles.head.path
+    java.nio.file.Files.delete(java.nio.file.Paths.get(out, gone))
+    val e = intercept[Exception](CellLayout.read(spark, out).count())
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).toSeq
+    val name = gone.substring(gone.lastIndexOf('/') + 1)
+    assert(messages.exists(_.contains(name)), messages.mkString("\n"))
+  }
 }
