@@ -56,8 +56,7 @@ object SparkEntry {
     "q_st_intersects_join" -> ((s, dir) => {
       val nb = nationBoxes(s, dir).select("n_nationkey", "nation_geom")
       val rg = regions(s, dir).select("region_id", "region_geom")
-      SpatialJoin.intersectsJoin(nb, "nation_geom", rg, "region_geom",
-          keys = Seq("n_nationkey", "region_id"))
+      SpatioTemporal.xzIntersectsJoin(nb, "nation_geom", rg, "region_geom")
         .select("n_nationkey", "region_id").orderBy("n_nationkey", "region_id")
     }),
     "q_st_dwithin_join" -> ((s, dir) => {

@@ -3,8 +3,8 @@ package graft.functions
 import graft.index.Z2
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -294,37 +294,6 @@ case class StAsGeoJson(child: Expression) extends UnaryExpression with Serializa
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
 
-/** vincenty_meters(lon1, lat1, lon2, lat2) → WGS84 ellipsoidal geodesic
-  * distance (reference kNN ranks by Vincenty, GeomDistance.scala:84-140);
-  * raw-coordinate variant so the kNN join ranks without building WKB. */
-case class VincentyMeters(children: Seq[Expression]) extends Expression with Serializable {
-  require(children.size == 4, "vincenty_meters(lon1, lat1, lon2, lat2)")
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = children.exists(_.nullable)
-  override def eval(input: InternalRow): Any = {
-    val vs = children.map(_.eval(input))
-    if (vs.contains(null)) null
-    else graft.geom.Geodesy.vincentyMeters(vs(0).asInstanceOf[Double],
-      vs(1).asInstanceOf[Double], vs(2).asInstanceOf[Double], vs(3).asInstanceOf[Double])
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val evs = children.map(_.genCode(ctx))
-    val anyNull = evs.map(e => s"${e.isNull}").mkString(" || ")
-    val childCode = evs.map(_.code).reduce(_ + _)
-    ev.copy(code =
-      code"""
-        $childCode
-        boolean ${ev.isNull} = $anyNull;
-        double ${ev.value} = 0.0;
-        if (!${ev.isNull}) {
-          ${ev.value} = graft.geom.Geodesy.vincentyMeters(${evs(0).value},
-            ${evs(1).value}, ${evs(2).value}, ${evs(3).value});
-        }""")
-  }
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): Expression = copy(cs)
-}
-
 /** st_asgml(geom) → GML 2 geometry fragment for ANY geometry type
   * (reference GmlExport, FeatureExporter.scala:60-72). */
 case class StAsGml(child: Expression) extends UnaryExpression with Serializable {
@@ -448,41 +417,6 @@ case class CellNeighbors(child: Expression) extends UnaryExpression with Seriali
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
 
-/** grid_cells(geom, xmin, ymin, xmax, ymax, w, h) → array<long> of packed
-  * `cy * w + cx` raster cells the geometry covers (points snap, lines mark
-  * crossed cells, polygons mark center-inside cells) — the non-point
-  * density generator (reference DensityIterator.scala:112-127). */
-case class GridCells(children: Seq[Expression]) extends Expression with Serializable {
-  require(children.size == 7, "grid_cells(geom, xmin, ymin, xmax, ymax, w, h)")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = children.exists(_.nullable)
-  override def eval(input: InternalRow): Any = {
-    val vs = children.map(_.eval(input))
-    if (vs.contains(null)) null
-    else new GenericArrayData(GeomRT.gridCells(vs(0).asInstanceOf[Array[Byte]],
-      vs(1).asInstanceOf[Double], vs(2).asInstanceOf[Double],
-      vs(3).asInstanceOf[Double], vs(4).asInstanceOf[Double],
-      vs(5).asInstanceOf[Int], vs(6).asInstanceOf[Int]))
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val evs = children.map(_.genCode(ctx))
-    val anyNull = evs.map(e => s"${e.isNull}").mkString(" || ")
-    val childCode = evs.map(_.code).reduce(_ + _)
-    ev.copy(code =
-      code"""
-        $childCode
-        boolean ${ev.isNull} = $anyNull;
-        org.apache.spark.sql.catalyst.util.GenericArrayData ${ev.value} = null;
-        if (!${ev.isNull}) {
-          ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-            ${RT.C}.gridCells(${evs(0).value}, ${evs(1).value}, ${evs(2).value},
-              ${evs(3).value}, ${evs(4).value}, ${evs(5).value}, ${evs(6).value}));
-        }""")
-  }
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): Expression = copy(cs)
-}
-
 // ---- S2-style cube-face Hilbert index expressions ----
 
 /** s2_encode(lon, lat, level) → S2-style cell id (cube face + Hilbert). */
@@ -522,103 +456,7 @@ case class S2Neighbors(child: Expression) extends UnaryExpression with Serializa
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
 
-/** s2_cover_bbox(xmin, ymin, xmax, ymax, level) → array<long> covering
-  * cells (sampled + neighbor closure over-approximation). */
-case class S2CoverBBox(children: Seq[Expression]) extends Expression with Serializable {
-  require(children.size == 5, "s2_cover_bbox(xmin, ymin, xmax, ymax, level)")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = children.exists(_.nullable)
-  override def eval(input: InternalRow): Any = {
-    val vs = children.map(_.eval(input))
-    if (vs.contains(null)) null
-    else new GenericArrayData(graft.index.S2Lite.coverBBox(
-      vs(0).asInstanceOf[Double], vs(1).asInstanceOf[Double],
-      vs(2).asInstanceOf[Double], vs(3).asInstanceOf[Double], vs(4).asInstanceOf[Int]))
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val evs = children.map(_.genCode(ctx))
-    val anyNull = evs.map(e => s"${e.isNull}").mkString(" || ")
-    val childCode = evs.map(_.code).reduce(_ + _)
-    ev.copy(code =
-      code"""
-        $childCode
-        boolean ${ev.isNull} = $anyNull;
-        org.apache.spark.sql.catalyst.util.GenericArrayData ${ev.value} = null;
-        if (!${ev.isNull}) {
-          ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-            graft.index.S2Lite.coverBBox(${evs(0).value}, ${evs(1).value},
-              ${evs(2).value}, ${evs(3).value}, ${evs(4).value}));
-        }""")
-  }
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): Expression = copy(cs)
-}
-
-/** s2_cover_budget(xmin, ymin, xmax, ymax, budget, levels) → array<long>:
-  * PER-ROW adaptive cover — each box picks the finest ladder level whose
-  * estimated cover fits the budget (the S2 analog of CellCoverBudget; one
-  * outlier world-sized box no longer degrades every row's resolution). */
-case class S2CoverBudget(children: Seq[Expression]) extends Expression with Serializable {
-  require(children.size == 6, "s2_cover_budget(xmin, ymin, xmax, ymax, budget, levels)")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = children.exists(_.nullable)
-  override def eval(input: InternalRow): Any = {
-    val vs = children.map(_.eval(input))
-    if (vs.contains(null)) null
-    else new GenericArrayData(graft.index.S2Lite.coverBBoxBudget(
-      vs(0).asInstanceOf[Double], vs(1).asInstanceOf[Double],
-      vs(2).asInstanceOf[Double], vs(3).asInstanceOf[Double],
-      vs(4).asInstanceOf[Int],
-      vs(5).asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toIntArray()))
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val evs = children.map(_.genCode(ctx))
-    val anyNull = evs.map(e => s"${e.isNull}").mkString(" || ")
-    val childCode = evs.map(_.code).reduce(_ + _)
-    ev.copy(code =
-      code"""
-        $childCode
-        boolean ${ev.isNull} = $anyNull;
-        org.apache.spark.sql.catalyst.util.GenericArrayData ${ev.value} = null;
-        if (!${ev.isNull}) {
-          ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-            graft.index.S2Lite.coverBBoxBudget(${evs(0).value}, ${evs(1).value},
-              ${evs(2).value}, ${evs(3).value}, ${evs(4).value}, ${evs(5).value}.toIntArray()));
-        }""")
-  }
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): Expression = copy(cs)
-}
-
 // ---- Z3 / XZ2 index expressions ----
-
-/** z3_encode(lon, lat, epochSec, periodSec, res) → packed Z3 cell id. */
-case class Z3Encode(children: Seq[Expression]) extends Expression with Serializable {
-  require(children.size == 5, "z3_encode(lon, lat, epoch_sec, period_sec, res)")
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = children.exists(_.nullable)
-  override def eval(input: InternalRow): Any = {
-    val vs = children.map(_.eval(input))
-    if (vs.contains(null)) null
-    else graft.index.Z3.encode(vs(0).asInstanceOf[Double], vs(1).asInstanceOf[Double],
-      vs(2).asInstanceOf[Long], vs(3).asInstanceOf[Long], vs(4).asInstanceOf[Int])
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val evs = children.map(_.genCode(ctx))
-    val anyNull = evs.map(e => s"${e.isNull}").mkString(" || ")
-    val childCode = evs.map(_.code).reduce(_ + _)
-    ev.copy(code =
-      code"""
-        $childCode
-        boolean ${ev.isNull} = $anyNull;
-        long ${ev.value} = -1L;
-        if (!${ev.isNull}) {
-          ${ev.value} = graft.index.Z3.encode(${evs(0).value}, ${evs(1).value}, ${evs(2).value}, ${evs(3).value}, ${evs(4).value});
-        }""")
-  }
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): Expression = copy(cs)
-}
 
 /** time_bin(epochSec, periodSec) → period bin (floorDiv). */
 case class TimeBin(left: Expression, right: Expression) extends BinaryExpression with Serializable {
@@ -723,119 +561,86 @@ case class HexNeighbors(child: Expression) extends UnaryExpression with Serializ
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
 
-/** hex_cover_bbox(xmin, ymin, xmax, ymax, res) → array<long> superset
-  * cover (hexes whose center lies in the box expanded by circumradius). */
-case class HexCoverBBox(children: Seq[Expression]) extends Expression with Serializable {
-  require(children.size == 5, "hex_cover_bbox(xmin, ymin, xmax, ymax, res)")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+// ---- N-ary kernels ----
+
+object StaticCall {
+  /** An N-ary SQL function: its usage as SQL writes it, the static JVM
+    * method it calls and that method's result type. */
+  final case class Kernel(usage: String, fn: String, dataType: DataType) {
+    val name: String = usage.takeWhile(_ != '(')
+    val arity: Int = usage.count(_ == ',') + 1
+  }
+
+  private val Cells = ArrayType(LongType, containsNull = false)
+  /** Every N-ary function by SQL name. The S2 and hex tiers differ only
+    * in the kernels they call: a cover at one level, the per-row budgeted
+    * cover, and the level that budgeted cover picks. */
+  val kernels: Map[String, Kernel] = Seq(
+    Kernel("vincenty_meters(lon1, lat1, lon2, lat2)", "graft.geom.Geodesy.vincentyMeters", DoubleType),
+    Kernel("grid_cells(geom, xmin, ymin, xmax, ymax, w, h)", s"${RT.C}.gridCells", Cells),
+    Kernel("z3_encode(lon, lat, epoch_sec, period_sec, res)", "graft.index.Z3.encode", LongType),
+    Kernel("s2_cover_bbox(xmin, ymin, xmax, ymax, level)", "graft.index.S2Lite.coverBBox", Cells),
+    Kernel("s2_cover_budget(xmin, ymin, xmax, ymax, budget, levels)", "graft.index.S2Lite.coverBBoxBudget", Cells),
+    Kernel("s2_cover_level(xmin, ymin, xmax, ymax, budget, levels)", "graft.index.S2Lite.chooseLevel", IntegerType),
+    Kernel("hex_cover_bbox(xmin, ymin, xmax, ymax, res)", "graft.index.HexLite.coverBBox", Cells),
+    Kernel("hex_cover_budget(xmin, ymin, xmax, ymax, budget, levels)", "graft.index.HexLite.coverBudget", Cells),
+    Kernel("hex_cover_level(xmin, ymin, xmax, ymax, budget, levels)", "graft.index.HexLite.chooseRes", IntegerType)
+  ).map(k => k.name -> k).toMap
+}
+
+/** The template of every N-ary expression: null when any input is null,
+  * otherwise one static call of the kernel, its result wrapped for
+  * Catalyst. An `array<int>` input reaches the kernel as `int[]`, an
+  * `array<long>` result leaves it as `long[]`. Interpreted eval invokes
+  * the same method by reflection, so both paths run one kernel. */
+case class StaticCall(name: String, children: Seq[Expression]) extends Expression with Serializable {
+  private val kernel = StaticCall.kernels(name)
+  require(children.size == kernel.arity, kernel.usage)
+  override def dataType: DataType = kernel.dataType
   override def nullable: Boolean = children.exists(_.nullable)
+  override def prettyName: String = name
+  override protected def stringArgs: Iterator[Any] = children.iterator
+
+  private def intArray(e: Expression): Boolean = e.dataType match {
+    case ArrayType(IntegerType, _) => true
+    case _ => false
+  }
+  @transient private lazy val method = {
+    val dot = kernel.fn.lastIndexOf('.')
+    Class.forName(kernel.fn.take(dot), true, getClass.getClassLoader).getMethods
+      .find(m => m.getName == kernel.fn.drop(dot + 1) && m.getParameterCount == children.size &&
+        java.lang.reflect.Modifier.isStatic(m.getModifiers))
+      .getOrElse(throw new NoSuchMethodException(s"${kernel.fn} of ${children.size} arguments"))
+  }
+
   override def eval(input: InternalRow): Any = {
     val vs = children.map(_.eval(input))
     if (vs.contains(null)) null
-    else new GenericArrayData(graft.index.HexLite.coverBBox(
-      vs(0).asInstanceOf[Double], vs(1).asInstanceOf[Double],
-      vs(2).asInstanceOf[Double], vs(3).asInstanceOf[Double], vs(4).asInstanceOf[Int]))
+    else {
+      val args = children.zip(vs).map { case (c, v) =>
+        (if (intArray(c)) v.asInstanceOf[ArrayData].toIntArray() else v).asInstanceOf[AnyRef]
+      }
+      method.invoke(null, args: _*) match {
+        case cells: Array[Long] => new GenericArrayData(cells)
+        case r => r
+      }
+    }
   }
+
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     import org.apache.spark.sql.catalyst.expressions.codegen.Block._
     val evs = children.map(_.genCode(ctx))
-    val anyNull = evs.map(e => s"${e.isNull}").mkString(" || ")
-    val childCode = evs.map(_.code).reduce(_ + _)
+    val args = children.zip(evs).map { case (c, e) => if (intArray(c)) s"${e.value}.toIntArray()" else s"${e.value}" }
+    val call = s"${kernel.fn}(${args.mkString(", ")})"
+    val result = if (dataType.isInstanceOf[ArrayType]) s"new org.apache.spark.sql.catalyst.util.GenericArrayData($call)" else call
     ev.copy(code =
       code"""
-        $childCode
-        boolean ${ev.isNull} = $anyNull;
-        org.apache.spark.sql.catalyst.util.GenericArrayData ${ev.value} = null;
+        ${evs.map(_.code).reduce(_ + _)}
+        boolean ${ev.isNull} = ${evs.map(e => s"${e.isNull}").mkString(" || ")};
+        ${CodeGenerator.javaType(dataType)} ${ev.value} = ${CodeGenerator.defaultValue(dataType)};
         if (!${ev.isNull}) {
-          ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-            graft.index.HexLite.coverBBox(${evs(0).value}, ${evs(1).value},
-              ${evs(2).value}, ${evs(3).value}, ${evs(4).value}));
+          ${ev.value} = $result;
         }""")
   }
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): Expression = copy(cs)
-}
-
-/** hex_cover_budget(xmin, ymin, xmax, ymax, budget, levels) → array<long>:
-  * PER-ROW adaptive cover at the finest ladder level fitting the budget
-  * (same shape as CellCoverBudget / S2CoverBudget). */
-case class HexCoverBudget(children: Seq[Expression]) extends Expression with Serializable {
-  require(children.size == 6, "hex_cover_budget(xmin, ymin, xmax, ymax, budget, levels)")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = children.exists(_.nullable)
-  override def eval(input: InternalRow): Any = {
-    val vs = children.map(_.eval(input))
-    if (vs.contains(null)) null
-    else new GenericArrayData(graft.index.HexLite.coverBudget(
-      vs(0).asInstanceOf[Double], vs(1).asInstanceOf[Double],
-      vs(2).asInstanceOf[Double], vs(3).asInstanceOf[Double],
-      vs(4).asInstanceOf[Int],
-      vs(5).asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toIntArray()))
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val evs = children.map(_.genCode(ctx))
-    val anyNull = evs.map(e => s"${e.isNull}").mkString(" || ")
-    val childCode = evs.map(_.code).reduce(_ + _)
-    ev.copy(code =
-      code"""
-        $childCode
-        boolean ${ev.isNull} = $anyNull;
-        org.apache.spark.sql.catalyst.util.GenericArrayData ${ev.value} = null;
-        if (!${ev.isNull}) {
-          ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-            graft.index.HexLite.coverBudget(${evs(0).value}, ${evs(1).value},
-              ${evs(2).value}, ${evs(3).value}, ${evs(4).value},
-              ((org.apache.spark.sql.catalyst.util.ArrayData) ${evs(5).value}).toIntArray()));
-        }""")
-  }
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): Expression = copy(cs)
-}
-
-/** (xmin, ymin, xmax, ymax, budget, levels) → the ladder level a per-row
-  * budgeted bbox cover picks, by calling the cover kernel's own level
-  * choice `fn`: the level never disagrees with the cover. */
-abstract class BBoxCoverLevel(fn: String) extends Expression with Serializable {
-  override def dataType: DataType = IntegerType
-  override def nullable: Boolean = children.exists(_.nullable)
-  protected def level(x0: Double, y0: Double, x1: Double, y1: Double, budget: Int, levels: Array[Int]): Int
-  override def eval(input: InternalRow): Any = {
-    val vs = children.map(_.eval(input))
-    if (vs.contains(null)) null
-    else level(vs(0).asInstanceOf[Double], vs(1).asInstanceOf[Double],
-      vs(2).asInstanceOf[Double], vs(3).asInstanceOf[Double], vs(4).asInstanceOf[Int],
-      vs(5).asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toIntArray())
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val evs = children.map(_.genCode(ctx))
-    val anyNull = evs.map(e => s"${e.isNull}").mkString(" || ")
-    val childCode = evs.map(_.code).reduce(_ + _)
-    ev.copy(code =
-      code"""
-        $childCode
-        boolean ${ev.isNull} = $anyNull;
-        int ${ev.value} = -1;
-        if (!${ev.isNull}) {
-          ${ev.value} = $fn(${evs(0).value}, ${evs(1).value}, ${evs(2).value},
-            ${evs(3).value}, ${evs(4).value}, ${evs(5).value}.toIntArray());
-        }""")
-  }
-}
-
-/** s2_cover_level(xmin, ymin, xmax, ymax, budget, levels) → the level
-  * s2_cover_budget covers the box at. */
-case class S2CoverLevel(children: Seq[Expression]) extends BBoxCoverLevel("graft.index.S2Lite.chooseLevel") {
-  require(children.size == 6, "s2_cover_level(xmin, ymin, xmax, ymax, budget, levels)")
-  protected def level(x0: Double, y0: Double, x1: Double, y1: Double, budget: Int, levels: Array[Int]): Int =
-    graft.index.S2Lite.chooseLevel(x0, y0, x1, y1, budget, levels)
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): Expression = copy(cs)
-}
-
-/** hex_cover_level(xmin, ymin, xmax, ymax, budget, levels) → the resolution
-  * hex_cover_budget covers the box at. */
-case class HexCoverLevel(children: Seq[Expression]) extends BBoxCoverLevel("graft.index.HexLite.chooseRes") {
-  require(children.size == 6, "hex_cover_level(xmin, ymin, xmax, ymax, budget, levels)")
-  protected def level(x0: Double, y0: Double, x1: Double, y1: Double, budget: Int, levels: Array[Int]): Int =
-    graft.index.HexLite.chooseRes(x0, y0, x1, y1, budget, levels)
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): Expression = copy(cs)
+  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): Expression = copy(children = cs)
 }

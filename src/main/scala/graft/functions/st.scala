@@ -13,6 +13,7 @@ import org.apache.spark.sql.graftshim.ColumnShim
 object st {
   private def col(e: Expression): Column = ColumnShim.column(e)
   private def ex(c: Column): Expression = ColumnShim.expression(c)
+  private def call(name: String, args: Column*): Column = col(StaticCall(name, args.map(ex)))
 
   def geomFromWKT(wkt: Column): Column = col(StGeomFromWKT(ex(wkt)))
   def asText(g: Column): Column = col(StAsText(ex(g)))
@@ -39,7 +40,7 @@ object st {
   def distanceSphere(a: Column, b: Column): Column = col(StDistanceSphere(ex(a), ex(b)))
   def distanceSpheroid(a: Column, b: Column): Column = col(StDistanceSpheroid(ex(a), ex(b)))
   def vincentyMeters(lon1: Column, lat1: Column, lon2: Column, lat2: Column): Column =
-    col(VincentyMeters(Seq(ex(lon1), ex(lat1), ex(lon2), ex(lat2))))
+    call("vincenty_meters", lon1, lat1, lon2, lat2)
   def area(g: Column): Column = col(StArea(ex(g)))
   def lengthGeom(g: Column): Column = col(StLengthGeom(ex(g)))
 
@@ -68,9 +69,9 @@ object st {
   def cellNeighbors(c: Column): Column = col(CellNeighbors(ex(c)))
   def gridCells(g: Column, xmin: Column, ymin: Column, xmax: Column, ymax: Column,
                 w: Column, h: Column): Column =
-    col(GridCells(Seq(ex(g), ex(xmin), ex(ymin), ex(xmax), ex(ymax), ex(w), ex(h))))
+    call("grid_cells", g, xmin, ymin, xmax, ymax, w, h)
   def z3Encode(lon: Column, lat: Column, epochSec: Column, periodSec: Column, res: Column): Column =
-    col(Z3Encode(Seq(ex(lon), ex(lat), ex(epochSec), ex(periodSec), ex(res))))
+    call("z3_encode", lon, lat, epochSec, periodSec, res)
   def timeBin(epochSec: Column, periodSec: Column): Column = col(TimeBin(ex(epochSec), ex(periodSec)))
   def xz2(g: Column, maxRes: Column): Column = col(Xz2Encode(ex(g), ex(maxRes)))
   def xz2QueryCover(g: Column, maxRes: Column): Column = col(Xz2QueryCover(ex(g), ex(maxRes)))
@@ -79,25 +80,25 @@ object st {
   def s2Parent(cell: Column, level: Column): Column = col(S2Parent(ex(cell), ex(level)))
   def s2Neighbors(cell: Column): Column = col(S2Neighbors(ex(cell)))
   def s2CoverBBox(xmin: Column, ymin: Column, xmax: Column, ymax: Column, level: Column): Column =
-    col(S2CoverBBox(Seq(ex(xmin), ex(ymin), ex(xmax), ex(ymax), ex(level))))
+    call("s2_cover_bbox", xmin, ymin, xmax, ymax, level)
   def s2CoverBudget(xmin: Column, ymin: Column, xmax: Column, ymax: Column,
                     budget: Column, levels: Column): Column =
-    col(S2CoverBudget(Seq(ex(xmin), ex(ymin), ex(xmax), ex(ymax), ex(budget), ex(levels))))
+    call("s2_cover_budget", xmin, ymin, xmax, ymax, budget, levels)
   def s2CoverLevel(xmin: Column, ymin: Column, xmax: Column, ymax: Column,
                    budget: Column, levels: Column): Column =
-    col(S2CoverLevel(Seq(ex(xmin), ex(ymin), ex(xmax), ex(ymax), ex(budget), ex(levels))))
+    call("s2_cover_level", xmin, ymin, xmax, ymax, budget, levels)
   def hexEncode(lon: Column, lat: Column, res: Column): Column =
     col(HexEncode(ex(lon), ex(lat), ex(res)))
   def hexParent(cell: Column, res: Column): Column = col(HexParent(ex(cell), ex(res)))
   def hexNeighbors(cell: Column): Column = col(HexNeighbors(ex(cell)))
   def hexCoverBBox(xmin: Column, ymin: Column, xmax: Column, ymax: Column, res: Column): Column =
-    col(HexCoverBBox(Seq(ex(xmin), ex(ymin), ex(xmax), ex(ymax), ex(res))))
+    call("hex_cover_bbox", xmin, ymin, xmax, ymax, res)
   def hexCoverBudget(xmin: Column, ymin: Column, xmax: Column, ymax: Column,
                      budget: Column, levels: Column): Column =
-    col(HexCoverBudget(Seq(ex(xmin), ex(ymin), ex(xmax), ex(ymax), ex(budget), ex(levels))))
+    call("hex_cover_budget", xmin, ymin, xmax, ymax, budget, levels)
   def hexCoverLevel(xmin: Column, ymin: Column, xmax: Column, ymax: Column,
                     budget: Column, levels: Column): Column =
-    col(HexCoverLevel(Seq(ex(xmin), ex(ymin), ex(xmax), ex(ymax), ex(budget), ex(levels))))
+    call("hex_cover_level", xmin, ymin, xmax, ymax, budget, levels)
   def geohashEncode(lon: Column, lat: Column, chars: Column): Column =
     col(GeohashEncode(ex(lon), ex(lat), ex(chars)))
   def geohashBox(h: Column): Column = col(GeohashBox(ex(h)))
@@ -111,6 +112,8 @@ object st {
       reg.createOrReplaceTempFunction(name, es => b(es(0), es(1)), "built-in")
     def f3(name: String, b: (Expression, Expression, Expression) => Expression): Unit =
       reg.createOrReplaceTempFunction(name, es => b(es(0), es(1), es(2)), "built-in")
+    def fN(name: String): Unit =
+      reg.createOrReplaceTempFunction(name, es => StaticCall(name, es), "built-in")
 
     f1("st_geomfromwkt", StGeomFromWKT)
     f1("st_geomfromtext", StGeomFromWKT)
@@ -134,7 +137,7 @@ object st {
     f2("st_distance", StDistance)
     f2("st_distance_sphere", StDistanceSphere)
     f2("st_distance_spheroid", StDistanceSpheroid)
-    reg.createOrReplaceTempFunction("vincenty_meters", es => VincentyMeters(es), "built-in")
+    fN("vincenty_meters")
     f1("st_area", StArea)
     f1("st_length", StLengthGeom)
     f1("st_x", StX)
@@ -156,21 +159,21 @@ object st {
     f2("cell_parent", CellParent)
     f1("cell_box", CellBox)
     f1("cell_neighbors", CellNeighbors)
-    reg.createOrReplaceTempFunction("grid_cells", es => GridCells(es), "built-in")
-    reg.createOrReplaceTempFunction("z3_encode", es => Z3Encode(es), "built-in")
+    fN("grid_cells")
+    fN("z3_encode")
     f2("time_bin", TimeBin)
     f2("xz2_encode", Xz2Encode)
     f2("xz2_query_cover", Xz2QueryCover)
     f3("s2_encode", S2Encode)
     f2("s2_parent", S2Parent)
     f1("s2_neighbors", S2Neighbors)
-    reg.createOrReplaceTempFunction("s2_cover_bbox", es => S2CoverBBox(es), "built-in")
-    reg.createOrReplaceTempFunction("s2_cover_budget", es => S2CoverBudget(es), "built-in")
+    fN("s2_cover_bbox")
+    fN("s2_cover_budget")
     f3("hex_encode", HexEncode)
     f2("hex_parent", HexParent)
     f1("hex_neighbors", HexNeighbors)
-    reg.createOrReplaceTempFunction("hex_cover_bbox", es => HexCoverBBox(es), "built-in")
-    reg.createOrReplaceTempFunction("hex_cover_budget", es => HexCoverBudget(es), "built-in")
+    fN("hex_cover_bbox")
+    fN("hex_cover_budget")
     f3("geohash_encode", GeohashEncode)
     f1("geohash_box", GeohashBox)
   }

@@ -40,47 +40,24 @@ object Dedup {
 
   /** True when the plan's estimated size crosses [[SmallCorpusBytes]];
     * unknown-size sentinels (LocalRelation, post-join frames) count as big —
-    * the safe direction, matching pre-r4 behavior.
-    * `spark.graft.dedup.sizeClass` = big | small overrides the estimate —
-    * a test seam (the small/big paths must agree; DedupParitySpec
-    * asserts parity) that also lets operators pin a path in production. */
+    * the safe direction, matching pre-r4 behavior. */
   private def isBig(df: DataFrame): Boolean =
-    df.sparkSession.conf.getOption("spark.graft.dedup.sizeClass") match {
-      case Some("big") => true
-      case Some("small") => false
-      case Some(other) => throw new IllegalArgumentException(
-        s"spark.graft.dedup.sizeClass: '$other' (expected 'big' or 'small')" +
-          " — failing fast so a typo cannot silently run the other path")
-      case None => df.queryExecution.optimizedPlan.stats.sizeInBytes > BigInt(SmallCorpusBytes)
-    }
+    df.queryExecution.optimizedPlan.stats.sizeInBytes > BigInt(SmallCorpusBytes)
 
   /** Materialize a compact derived frame of the big path, whose DAG fans
-    * out. The default is a lazy PERSIST: the columnar cache stores
+    * out, by a lazy PERSIST: the columnar cache stores
     * compressed batches, so fan-out branches on other executors fetch
     * compact column bytes — an eager `localCheckpoint` stores raw row
     * objects whose remote reads pay full per-row deserialization, measured
     * to HALVE the 1→4-executor scaling efficiency of the whole pipeline
     * (0.47 vs ~0.9 for every sub-stage; BENCH/CLUSTER.md r4). With a
-    * reliable checkpoint dir set (`sparkContext.setCheckpointDir`) the
-    * default is an eager RELIABLE `checkpoint` instead: lineage-free and
-    * executor-loss-safe, right for long multi-hour runs. Override with
-    * `spark.graft.dedup.materialize` = persist | localCheckpoint |
-    * checkpoint. Blocks are freed by the ContextCleaner when the frames
-    * are GC'd. */
-  private def compactFrame(df: DataFrame): DataFrame = {
-    val mode = df.sparkSession.conf.getOption("spark.graft.dedup.materialize")
-      .getOrElse(if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
-        "checkpoint" else "persist")
-    mode match {
-      case "checkpoint" => df.checkpoint(true)
-      case "localCheckpoint" => df.localCheckpoint(true)
-      case "persist" => df.persist()
-      case other => throw new IllegalArgumentException(
-        s"spark.graft.dedup.materialize: '$other' (expected 'persist'," +
-          " 'localCheckpoint' or 'checkpoint') — failing fast so a typo" +
-          " cannot silently select a different materialization")
-    }
-  }
+    * reliable checkpoint dir set (`sparkContext.setCheckpointDir`) it is an
+    * eager RELIABLE `checkpoint` instead: lineage-free and
+    * executor-loss-safe, right for long multi-hour runs. Blocks are freed
+    * by the ContextCleaner when the frames are GC'd. */
+  private def compactFrame(df: DataFrame): DataFrame =
+    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(true)
+    else df.persist()
 
   /** Exact duplicate groups by content hash: (text_hash, keeper_id, n). */
   def exact(df: DataFrame, text: Column, id: Column): DataFrame =
@@ -118,8 +95,15 @@ object Dedup {
    */
   def minhashPairs(df: DataFrame, textName: String, idName: String,
                    numHashes: Int = 32, rowsPerBand: Int = 4, shingle: Int = 3,
-                   threshold: Double = 0.6, maxBucket: Long = 10000L): DataFrame = {
-    if (!isBig(df)) {
+                   threshold: Double = 0.6, maxBucket: Long = 10000L): DataFrame =
+    minhashPairs(df, textName, idName, numHashes, rowsPerBand, shingle, threshold, maxBucket, isBig(df))
+
+  /** [[minhashPairs]] with the size class as an argument (`big` runs the
+    * big path), so a test runs both paths on one corpus. */
+  private[graft] def minhashPairs(df: DataFrame, textName: String, idName: String,
+                                  numHashes: Int, rowsPerBand: Int, shingle: Int,
+                                  threshold: Double, maxBucket: Long, big: Boolean): DataFrame = {
+    if (!big) {
       // the signature is used twice, so Catalyst keeps it in its own
       // projection (computed once); sub-shingle texts get null bands and
       // drop out of the band explode
@@ -222,7 +206,12 @@ object Dedup {
    *  sig == 0 (the no-token signature of empty/whitespace pages) is
    *  excluded. */
   def simhashPairs(df: DataFrame, textName: String, idName: String,
-                   maxHamming: Int = 3, maxBucket: Long = 10000L): DataFrame = {
+                   maxHamming: Int = 3, maxBucket: Long = 10000L): DataFrame =
+    simhashPairs(df, textName, idName, maxHamming, maxBucket, isBig(df))
+
+  /** [[simhashPairs]] with the size class as an argument, as for [[minhashPairs]]. */
+  private[graft] def simhashPairs(df: DataFrame, textName: String, idName: String,
+                                  maxHamming: Int, maxBucket: Long, big: Boolean): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // ONE scan emits all 4 rotated blocks per row (no 4-way self-union);
     // block key is a LONG — bits 0..15 the slice, bits 16..17 the slice
@@ -230,7 +219,7 @@ object Dedup {
     def blockKeys(sig: Column) = array((0 until 4).map { b =>
       shiftright(sig, b * 16).bitwiseAND(lit(0xffffL)).bitwiseOR(lit(b.toLong << 16))
     }: _*)
-    if (!isBig(df)) {
+    if (!big) {
       val reps = textGroups(df, textName, idName)
         .select(col("rid"), col("__ids"), tx.simhash(col("__t")).as("__p"))
         .withColumn("__keys", when(col("__p") =!= 0L, blockKeys(col("__p"))))

@@ -3,6 +3,7 @@ package graft.ops
 import graft.functions.st
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.ColumnShim.{column, expression}
 
 /**
  * Spatial joins as cell-keyed equi-joins + exact refine — the Spark-native
@@ -47,32 +48,16 @@ object SpatialJoin {
       budget: Int = DefaultBudget,
       broadcastPolys: Option[Boolean] = None,
       salts: Int = 8,
-      knownHotCells: Option[Array[Long]] = None): DataFrame = {
-    val levelsLit = typedLit(levels)
-    // finest-level cell once (one WKB parse), ancestors by bit math;
-    // when the "geometry" is a constructed st_point(x, y), skip the WKB
-    // round-trip entirely and bit-interleave the raw doubles
-    val finest = levels.last
-    val finestCell = {
-      import org.apache.spark.sql.graftshim.ColumnShim
-      ColumnShim.expression(pointGeom) match {
-        case graft.functions.StPoint(x, y) =>
-          ColumnShim.column(graft.functions.Z2Encode(
-            x, y, ColumnShim.expression(lit(finest))))
-        case _ => st.cellOf(pointGeom, lit(finest))
-      }
-    }
-    cellJoin(polys, st.cellCoverBudget(polyGeom, lit(budget), levelsLit),
-      st.cellCoverLevel(polyGeom, lit(budget), levelsLit),
-      points, Some(finestCell), ancestorAt(st.cellParent, finest),
-      pmod(hash(pointGeom), lit(salts)), refine, levels, budget, broadcastPolys, salts, knownHotCells)
-  }
+      knownHotCells: Option[Array[Long]] = None): DataFrame =
+    cellJoin(CellFamily.Z2(levels, budget), polys, Seq(polyGeom), points, Seq(pointGeom),
+      refine, broadcastPolys, salts, knownHotCells)
 
   /**
-   * The cover join of every cell family (Z2, S2, hex). Families differ in
-   * two places: `coverLevel`, the level a build row's budgeted `cover`
-   * picks (the cover kernel's own level choice), and `cellAt(L)`, a point's
-   * cell at level L (it may read `__fcell`, computed once by `finest`).
+   * The cover join of every cell family (Z2, S2, hex): `build` is a build
+   * row's cover input and `probe` a point's, as the family reads them. A
+   * point's finest cell is computed once into `__fcell` where the family
+   * derives coarser cells from it; probe rows scatter over salts by the
+   * hash of `probe`.
    *
    * A probe row at a level no cover uses matches nothing, yet on the
    * shuffled path it is shuffled, sorted and merged. So that path first
@@ -85,19 +70,25 @@ object SpatialJoin {
    * the scan: every level is probed.
    */
   private def cellJoin(
-      polys: DataFrame, cover: Column, coverLevel: Column,
-      points: DataFrame, finest: Option[Column], cellAt: Int => Column, probeSalt: Column,
-      refine: DataFrame => Column, levels: Array[Int], budget: Int,
-      broadcastPolys: Option[Boolean], salts: Int, knownHotCells: Option[Array[Long]]): DataFrame = {
-    val doBroadcast = broadcastPolys.getOrElse(coverFitsBroadcast(polys, budget))
+      family: CellFamily, polys: DataFrame, build: Seq[Column], points: DataFrame, probe: Seq[Column],
+      refine: DataFrame => Column, broadcastPolys: Option[Boolean], salts: Int,
+      knownHotCells: Option[Array[Long]]): DataFrame = {
+    val (b, p) = (build.map(expression), probe.map(expression))
+    val doBroadcast = broadcastPolys.getOrElse(coverFitsBroadcast(polys, family.budget))
     val probeLevels =
-      if (doBroadcast) levels
-      else { val mask = levelMask(polys, coverLevel); levels.filter(l => (mask >>> l & 1L) == 1L) }
-    val cells = if (probeLevels.isEmpty) typedLit(Array.empty[Long]) else array(probeLevels.toSeq.map(cellAt): _*)
-    val probeCells = finest.fold(points)(points.withColumn("__fcell", _))
+      if (doBroadcast) family.levels
+      else {
+        val mask = levelMask(polys, column(family.coverLevel(b)))
+        family.levels.filter(l => (mask >>> l & 1L) == 1L)
+      }
+    val fine = family.fineCell(p)
+    val cells =
+      if (probeLevels.isEmpty) typedLit(Array.empty[Long])
+      else column(family.ladder(p, probeLevels, fine.map(_ => expression(col("__fcell")))))
+    val probeCells = fine.fold(points)(f => points.withColumn("__fcell", column(f)))
       .withColumn("__qcell", explode(cells)).drop("__fcell")
-    val buildCells = spreadBuild(polys).withColumn("__pcell", explode(cover))
-    coverJoin(buildCells, probeCells, probeSalt, refine, doBroadcast, salts, knownHotCells)
+    val buildCells = spreadBuild(polys).withColumn("__pcell", explode(column(family.cover(b))))
+    coverJoin(buildCells, probeCells, pmod(hash(probe: _*), lit(salts)), refine, doBroadcast, salts, knownHotCells)
   }
 
   /** Bit L is set iff some build row's cover sits at level L; null levels
@@ -106,10 +97,6 @@ object SpatialJoin {
   private[graft] def levelMask(polys: DataFrame, coverLevel: Column): Long =
     polys.select(coverLevel).queryExecution.toRdd
       .map(r => if (r.isNullAt(0)) 0L else 1L << r.getInt(0)).fold(0L)(_ | _)
-
-  /** A point's cell at level `l` by bit math from its cell at `finest`. */
-  private def ancestorAt(parent: (Column, Column) => Column, finest: Int)(l: Int): Column =
-    if (l == finest) col("__fcell") else parent(col("__fcell"), lit(l))
 
   /** Broadcast the cover side? A plan-statistics cost probe — no job
     * launched when stats are real (the reference's cost-based strategy
@@ -244,14 +231,9 @@ object SpatialJoin {
       budget: Int = S2Budget,
       broadcastPolys: Option[Boolean] = None,
       salts: Int = 8,
-      knownHotCells: Option[Array[Long]] = None): DataFrame = {
-    val Seq(x0, y0, x1, y1, lon, lat) = Seq(xminName, yminName, xmaxName, ymaxName, lonName, latName).map(col)
-    cellJoin(polys, st.s2CoverBudget(x0, y0, x1, y1, lit(budget), typedLit(levels)),
-      st.s2CoverLevel(x0, y0, x1, y1, lit(budget), typedLit(levels)),
-      points, Some(st.s2Encode(lon, lat, lit(levels.last))), ancestorAt(st.s2Parent, levels.last),
-      pmod(hash(lon, lat), lit(salts)), df => st.contains(df(polyGeomName), st.point(df(lonName), df(latName))),
-      levels, budget, broadcastPolys, salts, knownHotCells)
-  }
+      knownHotCells: Option[Array[Long]] = None): DataFrame =
+    bboxContainsJoin(CellFamily.S2(levels, budget), polys, Seq(xminName, yminName, xmaxName, ymaxName),
+      polyGeomName, points, lonName, latName, broadcastPolys, salts, knownHotCells)
 
   /** Hex ladder resolutions for [[containsJoinHex]] (circumradius 4° → 0.25°). */
   val HexLevels: Array[Int] = Array(1, 2, 3, 4, 5)
@@ -278,14 +260,19 @@ object SpatialJoin {
       budget: Int = HexBudget,
       broadcastPolys: Option[Boolean] = None,
       salts: Int = 8,
-      knownHotCells: Option[Array[Long]] = None): DataFrame = {
-    val Seq(x0, y0, x1, y1, lon, lat) = Seq(xminName, yminName, xmaxName, ymaxName, lonName, latName).map(col)
-    cellJoin(polys, st.hexCoverBudget(x0, y0, x1, y1, lit(budget), typedLit(levels)),
-      st.hexCoverLevel(x0, y0, x1, y1, lit(budget), typedLit(levels)),
-      points, None, l => st.hexEncode(lon, lat, lit(l)),
-      pmod(hash(lon, lat), lit(salts)), df => st.contains(df(polyGeomName), st.point(df(lonName), df(latName))),
-      levels, budget, broadcastPolys, salts, knownHotCells)
-  }
+      knownHotCells: Option[Array[Long]] = None): DataFrame =
+    bboxContainsJoin(CellFamily.Hex(levels, budget), polys, Seq(xminName, yminName, xmaxName, ymaxName),
+      polyGeomName, points, lonName, latName, broadcastPolys, salts, knownHotCells)
+
+  /** Point-in-polygon join of a family that covers each polygon's bounding
+    * box (S2, hex), refined by st_contains on the raw coordinates. */
+  private def bboxContainsJoin(
+      family: CellFamily, polys: DataFrame, bboxNames: Seq[String], polyGeomName: String,
+      points: DataFrame, lonName: String, latName: String,
+      broadcastPolys: Option[Boolean], salts: Int, knownHotCells: Option[Array[Long]]): DataFrame =
+    cellJoin(family, polys, bboxNames.map(col), points, Seq(col(lonName), col(latName)),
+      df => st.contains(df(polyGeomName), st.point(df(lonName), df(latName))),
+      broadcastPolys, salts, knownHotCells)
 
   /** Probe-side cell histogram → cells whose estimated row count exceeds
     * `HotCellRows` (sampled; the cost model the reference drives from
@@ -306,26 +293,6 @@ object SpatialJoin {
       budget: Int = DefaultBudget): DataFrame =
     polygonsWithPoints(polys, col(polyGeomName), points, col(pointGeomName),
       df => st.contains(df(polyGeomName), df(pointGeomName)), levels, budget)
-
-  /**
-   * Geometry×geometry intersects join (both sides may be non-point): cover
-   * both sides at one fixed resolution, equi-join, exact refine, then
-   * dedupe on the caller's keys (non-point × non-point pairs can match in
-   * several cells — the analog of the reference's DeDuplicatingIterator,
-   * QueryPlanner.scala:84-93).
-   */
-  def intersectsJoin(
-      left: DataFrame, leftGeomName: String,
-      right: DataFrame, rightGeomName: String,
-      keys: Seq[String],
-      res: Int = 6): DataFrame = {
-    val l = left.withColumn("__lcell", explode(st.cellCover(col(leftGeomName), lit(res))))
-    val r = right.withColumn("__rcell", explode(st.cellCover(col(rightGeomName), lit(res))))
-    val joined = l.join(r, col("__lcell") === col("__rcell"), "inner")
-    joined.filter(st.intersects(joined(leftGeomName), joined(rightGeomName)))
-      .drop("__lcell", "__rcell")
-      .dropDuplicates(keys)
-  }
 
   /**
    * Distance join with planar-degree radius (the oracle-parity variant; the

@@ -35,8 +35,7 @@ import org.apache.spark.sql.types.LongType
  */
 object SpatialJoinRewrite extends Rule[LogicalPlan] {
 
-  private val Levels = graft.ops.SpatialJoin.DefaultLevels
-  private val Budget = graft.ops.SpatialJoin.DefaultBudget
+  private val Z2 = graft.ops.CellFamily.Z2()
   /** Fixed XZ2 res for the SQL rewrite: Σ_{r≤7} 4^r ≈ 21.8k cells covers a
     * world-sized window and stays under the 65536 enumeration budget, so
     * the rewrite is overflow-proof for ANY literal/column window. */
@@ -146,21 +145,15 @@ object SpatialJoinRewrite extends Rule[LogicalPlan] {
             Project(j.output, Join(nl, nr, Inner, Some(newCond), hint))
         }
         case Some((polySide, pointSide, g, x, y, swapped)) =>
-          val levelsLit = CreateArray(Levels.toSeq.map(Literal(_)))
           val pcell = AttributeReference("__graft_pcell", LongType, nullable = false)()
           val polyGen = Generate(
-            Explode(CellCoverBudget(g, Literal(Budget), levelsLit)),
+            Explode(Z2.cover(Seq(g))),
             unrequiredChildIndex = Nil, outer = false, qualifier = None,
             generatorOutput = Seq(pcell), child = polySide)
 
-          val finest = Levels.last
-          val fcell = Z2Encode(x, y, Literal(finest))
-          val ladder = CreateArray(Levels.toSeq.map { r =>
-            if (r == finest) fcell else CellParent(fcell, Literal(r))
-          })
           val qcell = AttributeReference("__graft_qcell", LongType, nullable = false)()
           val pointGen = Generate(
-            Explode(ladder),
+            Explode(Z2.ladder(Seq(x, y))),
             unrequiredChildIndex = Nil, outer = false, qualifier = None,
             generatorOutput = Seq(qcell), child = pointSide)
 

@@ -1,5 +1,7 @@
 package graft.streaming
 
+import graft.functions.st
+import graft.ops.SpatialJoin
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -116,31 +118,21 @@ object LiveView {
   /**
    * Stream-static spatial join: a stream of points against a STATIC
    * polygon table — the reference's "which region is this live feature
-   * in" enrichment. Same cell shape as the batch join
-   * ([[graft.ops.SpatialJoin.polygonsWithPoints]]): polygon covers are
-   * broadcast (the only sound build side for an unbounded stream), the
+   * in" enrichment. It is the batch join
+   * ([[graft.ops.SpatialJoin.polygonsWithPoints]]) with the polygon covers
+   * broadcast (the only sound build side for an unbounded stream): the
    * stream side adds its ancestor-ladder cells as a narrow projection, so
    * every micro-batch pays one broadcast-hash probe + exact refine and
    * the stream NEVER shuffles.
    */
   def streamPointsInPolygons(stream: DataFrame, lonName: String, latName: String,
                              polys: DataFrame, polyGeomName: String,
-                             levels: Array[Int] = graft.ops.SpatialJoin.DefaultLevels,
-                             budget: Int = graft.ops.SpatialJoin.DefaultBudget): DataFrame = {
-    import graft.functions.st
-    val polyCells = polys.withColumn("__pcell",
-      explode(st.cellCoverBudget(col(polyGeomName), lit(budget), typedlit(levels))))
-    val finest = levels.last
-    val keyed = stream
-      .withColumn("__fcell", st.z2Encode(col(lonName), col(latName), lit(finest)))
-      .withColumn("__qcell", explode(array(levels.map(r =>
-        if (r == finest) col("__fcell") else st.cellParent(col("__fcell"), lit(r))): _*)))
-      .drop("__fcell")
-    val joined = keyed.join(broadcast(polyCells), col("__qcell") === col("__pcell"), "inner")
-    joined.filter(st.contains(joined(polyGeomName),
-        st.point(joined(lonName), joined(latName))))
-      .drop("__pcell", "__qcell")
-  }
+                             levels: Array[Int] = SpatialJoin.DefaultLevels,
+                             budget: Int = SpatialJoin.DefaultBudget): DataFrame =
+    SpatialJoin.polygonsWithPoints(polys, col(polyGeomName),
+      stream, st.point(col(lonName), col(latName)),
+      df => st.contains(df(polyGeomName), st.point(df(lonName), df(latName))),
+      levels, budget, broadcastPolys = Some(true))
 
   /** Convenience: parse a raw streaming DataFrame into FeatureEvents. */
   def fromRaw(df: DataFrame): Dataset[FeatureEvent] = {

@@ -2,10 +2,11 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import graft.ops.SpatialJoin
+import graft.ops.{CellFamily, SpatialJoin}
 import graft.pages.WebPages
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.ColumnShim
 
 /**
  * Hot-cell salting evidence under a REAL shuffle join: broadcast disabled
@@ -47,9 +48,8 @@ object SkewBench {
         .select("region_id", "region_geom")
       // hot cells from table statistics (untimed — production keeps the
       // cell histogram in the layout manifest, not in the query path)
-      val ladder = pages.select(
-        explode(array(graft.ops.SpatialJoin.DefaultLevels.map(r =>
-          graft.functions.st.z2Encode(col("lon"), col("lat"), lit(r))): _*)).as("__qcell"))
+      val probe = Seq(col("lon"), col("lat")).map(ColumnShim.expression)
+      val ladder = pages.select(explode(ColumnShim.column(CellFamily.Z2().ladder(probe))).as("__qcell"))
       val hot = SpatialJoin.hotCells(ladder, col("__qcell"), 8)
       println(s"HOT_CELLS=${hot.length}")
       def run(salts: Int, aqeSkew: Boolean): Double = {

@@ -169,19 +169,15 @@ class DedupGuardRecallSpec extends SparkSpec {
     // materialization) — both paths must answer identically. The fixture
     // mixes exact-dup groups (expansion path), near-dups, and uniques.
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    def pairsWith(sizeClass: String, fn: () => org.apache.spark.sql.DataFrame): Set[(Long, Long)] = {
-      spark.conf.set("spark.graft.dedup.sizeClass", sizeClass)
-      try fn().select("id_a", "id_b").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      finally spark.conf.unset("spark.graft.dedup.sizeClass")
-    }
-    def mh() = graft.ops.Dedup.minhashPairs(docs, "text", "doc_id")
-    def sh() = graft.ops.Dedup.simhashPairs(docs, "text", "doc_id")
-    val mhSmall = pairsWith("small", mh _)
-    val mhBig = pairsWith("big", mh _)
+    def pairsWith(big: Boolean, fn: Boolean => org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+      fn(big).select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    def mh(big: Boolean) = graft.ops.Dedup.minhashPairs(docs, "text", "doc_id", 32, 4, 3, 0.6, 10000L, big)
+    def sh(big: Boolean) = graft.ops.Dedup.simhashPairs(docs, "text", "doc_id", 3, 10000L, big)
+    val mhSmall = pairsWith(big = false, mh)
+    val mhBig = pairsWith(big = true, mh)
     assert(mhSmall === mhBig && mhSmall.nonEmpty)
-    val shSmall = pairsWith("small", sh _)
-    val shBig = pairsWith("big", sh _)
+    val shSmall = pairsWith(big = false, sh)
+    val shBig = pairsWith(big = true, sh)
     assert(shSmall === shBig && shSmall.nonEmpty)
   }
 }

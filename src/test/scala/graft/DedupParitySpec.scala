@@ -62,19 +62,24 @@ class DedupParitySpec extends SparkSpec {
       StructType(Seq(StructField("doc_id", idType), StructField("text", StringType))))
   }
 
-  /** (id_a, id_b, similarity) rows of `run` on the given size path. */
-  private def pairs(sizeClass: String, run: () => DataFrame): (StructType, Seq[(Long, Long, Any)]) =
-    withSqlConf("spark.graft.dedup.sizeClass" -> sizeClass) {
-      val df = run()
-      (df.schema, df.collect().toSeq.map(r =>
-        (r.getAs[Number](0).longValue, r.getAs[Number](1).longValue, r.get(2))))
-    }
+  /** (id_a, id_b, similarity) rows of `run` on the big path or the small one. */
+  private def pairs(big: Boolean, run: Boolean => DataFrame): (StructType, Seq[(Long, Long, Any)]) = {
+    val df = run(big)
+    (df.schema, df.collect().toSeq.map(r =>
+      (r.getAs[Number](0).longValue, r.getAs[Number](1).longValue, r.get(2))))
+  }
+
+  /** minhashPairs / simhashPairs at their default parameters unless given. */
+  private def minhash(df: DataFrame, maxBucket: Long = 10000L)(big: Boolean): DataFrame =
+    Dedup.minhashPairs(df, "text", "doc_id", 32, 4, 3, 0.6, maxBucket, big)
+  private def simhash(df: DataFrame, maxHamming: Int, maxBucket: Long)(big: Boolean): DataFrame =
+    Dedup.simhashPairs(df, "text", "doc_id", maxHamming, maxBucket, big)
 
   /** Asserts small == big (schema types and pair set; the small path emits
     * each pair once) and returns the pairs. */
-  private def parity(run: () => DataFrame): Set[(Long, Long, Any)] = {
-    val (smallSchema, smallRows) = pairs("small", run)
-    val (bigSchema, bigRows) = pairs("big", run)
+  private def parity(run: Boolean => DataFrame): Set[(Long, Long, Any)] = {
+    val (smallSchema, smallRows) = pairs(big = false, run)
+    val (bigSchema, bigRows) = pairs(big = true, run)
     val (small, big) = (smallRows.toSet, bigRows.toSet)
     assert(smallSchema.map(_.dataType) === bigSchema.map(_.dataType))
     assert(smallRows.size === small.size, "the small path emitted a pair twice")
@@ -91,20 +96,19 @@ class DedupParitySpec extends SparkSpec {
   cases.foreach { case (name, seed, intIds, maxBucket) =>
     test(s"minhashPairs: small path == big path, $name") {
       val df = frame(corpus(seed), intIds)
-      val got = parity(() => Dedup.minhashPairs(df, "text", "doc_id", maxBucket = maxBucket))
+      val got = parity(minhash(df, maxBucket))
       val sims = got.toSeq.map(_._3.asInstanceOf[Double])
       assert(sims.contains(1.0))
       if (maxBucket > 3) assert(sims.contains(0.6) && sims.exists(s => s > 0.6 && s < 1.0))
       if (intIds) {
-        val (schema, _) = pairs("small", () => Dedup.minhashPairs(df, "text", "doc_id"))
+        val (schema, _) = pairs(big = false, minhash(df))
         assert(schema("id_a").dataType === IntegerType && schema("id_b").dataType === IntegerType)
       }
     }
 
     test(s"simhashPairs: small path == big path, $name") {
       val df = frame(corpus(seed), intIds)
-      val got = parity(() => Dedup.simhashPairs(df, "text", "doc_id", maxHamming = 6,
-        maxBucket = maxBucket))
+      val got = parity(simhash(df, maxHamming = 6, maxBucket = maxBucket))
       val dists = got.toSeq.map(_._3.asInstanceOf[Int])
       assert(dists.contains(0))
       if (maxBucket > 3) assert(dists.exists(_ > 0))
@@ -117,9 +121,9 @@ class DedupParitySpec extends SparkSpec {
     val rows = (0 until 500).map(i => (Some(i.toLong), t)) ++
       Seq((Some(900L), near), (Some(901L), near), (Some(902L), "unrelated words in a page"))
     val df = frame(rows, intIds = false)
-    val mh = parity(() => Dedup.minhashPairs(df, "text", "doc_id", maxBucket = 100))
+    val mh = parity(minhash(df, maxBucket = 100))
     assert(mh.size === 500 * 499 / 2 + 1 + 500 * 2)
-    val sh = parity(() => Dedup.simhashPairs(df, "text", "doc_id", maxHamming = 64, maxBucket = 100))
+    val sh = parity(simhash(df, maxHamming = 64, maxBucket = 100))
     assert(sh.count(_._3 == 0) === 500 * 499 / 2 + 1)
   }
 

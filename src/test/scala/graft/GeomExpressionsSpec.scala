@@ -142,6 +142,48 @@ class GeomExpressionsSpec extends SparkSpec {
     assert(byId.values.count(_.contains(true)) === 4 && byId.values.count(_.isEmpty) === 12)
   }
 
+  test("N-ary kernels: generated code == interpreted == a direct kernel call, nulls included") {
+    import graft.functions.GeomRT
+    import graft.index.{HexLite, S2Lite, Z3}
+    import org.apache.spark.sql.types._
+    val boxes = Seq[Seq[java.lang.Double]](Seq(-10.0, -5.0, 12.0, 8.0), Seq(100.0, 40.0, 100.5, 40.2),
+      Seq(-180.0, -90.0, 180.0, 90.0), Seq(null, 0.0, 1.0, 1.0), Seq(0.0, null, 1.0, 1.0))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(boxes.zipWithIndex.map {
+        case (b, i) => Row.fromSeq(i +: b) }, 2),
+      StructType(StructField("id", IntegerType) +: Seq("x0", "y0", "x1", "y1").map(StructField(_, DoubleType))))
+    val lv = Array(2, 4, 6, 8)
+    val Seq(x0, y0, x1, y1) = Seq("x0", "y0", "x1", "y1").map(col)
+    val cols = Seq(
+      st.vincentyMeters(x0, y0, x1, y1),
+      st.gridCells(st.makeBox(x0, y0, x1, y1), lit(-180.0), lit(-90.0), lit(180.0), lit(90.0), lit(36), lit(18)),
+      st.z3Encode(x0, y0, lit(259200L), lit(86400L), lit(10)),
+      st.s2CoverBBox(x0, y0, x1, y1, lit(4)),
+      st.s2CoverBudget(x0, y0, x1, y1, lit(64), typedLit(lv)),
+      st.s2CoverLevel(x0, y0, x1, y1, lit(64), typedLit(lv)),
+      st.hexCoverBBox(x0, y0, x1, y1, lit(2)),
+      st.hexCoverBudget(x0, y0, x1, y1, lit(64), typedLit(lv)),
+      st.hexCoverLevel(x0, y0, x1, y1, lit(64), typedLit(lv)))
+    def kernels(a: Double, b: Double, c: Double, d: Double): Seq[Any] = Seq(
+      graft.geom.Geodesy.vincentyMeters(a, b, c, d),
+      GeomRT.gridCells(GeomRT.makeBox(a, b, c, d), -180.0, -90.0, 180.0, 90.0, 36, 18).toSeq,
+      Z3.encode(a, b, 259200L, 86400L, 10),
+      S2Lite.coverBBox(a, b, c, d, 4).toSeq, S2Lite.coverBBoxBudget(a, b, c, d, 64, lv).toSeq,
+      S2Lite.chooseLevel(a, b, c, d, 64, lv),
+      HexLite.coverBBox(a, b, c, d, 2).toSeq, HexLite.coverBudget(a, b, c, d, 64, lv).toSeq,
+      HexLite.chooseRes(a, b, c, d, 64, lv))
+    def run(): Seq[Row] = df.select(col("id") +: cols: _*).collect().sortBy(_.getInt(0)).toSeq
+    val codegen = run()
+    val interpreted = withSqlConf("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(run())
+    assert(codegen === interpreted)
+    codegen.zip(boxes).foreach { case (r, b) =>
+      val want = if (b.contains(null)) Seq.fill(cols.size)(null) else kernels(b(0), b(1), b(2), b(3))
+      assert(r.toSeq.tail === want, s"box $b")
+    }
+    // plans name each call by its SQL function
+    assert(df.select(cols(4)).queryExecution.analyzed.toString.contains("s2_cover_budget(x0#"))
+  }
+
   test("cell expressions agree with Z2 core") {
     import graft.index.Z2
     val r = spark.sql(

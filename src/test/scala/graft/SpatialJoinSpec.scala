@@ -51,27 +51,6 @@ class SpatialJoinSpec extends SparkSpec {
     assert(run(true) === run(false))
   }
 
-  test("intersectsJoin == brute-force box-overlap oracle (non-point x non-point)") {
-    val nb = WebPages.nationBoxes(spark, sfDir)
-    val rg = WebPages.regions(spark, sfDir)
-    val nBoxes = nb.select("n_nationkey", "xmin", "ymin", "xmax", "ymax").collect()
-      .map(r => (asL(r, 0), r.getDouble(1), r.getDouble(2), r.getDouble(3), r.getDouble(4)))
-    val rBoxes = rg.select("region_id", "xmin", "ymin", "xmax", "ymax").collect()
-      .map(r => (asL(r, 0), r.getDouble(1), r.getDouble(2), r.getDouble(3), r.getDouble(4)))
-    val expect = (for {
-      (nk, ax0, ay0, ax1, ay1) <- nBoxes
-      (rid, bx0, by0, bx1, by1) <- rBoxes
-      if !(ax1 < bx0 || bx1 < ax0 || ay1 < by0 || by1 < ay0)
-    } yield (nk, rid)).toSet
-    val got = SpatialJoin.intersectsJoin(
-        nb.select("n_nationkey", "nation_geom"), "nation_geom",
-        rg.select("region_id", "region_geom"), "region_geom",
-        keys = Seq("n_nationkey", "region_id"))
-      .select("n_nationkey", "region_id").collect().map(r => (asL(r, 0), asL(r, 1)))
-    assert(got.length === got.toSet.size)
-    assert(got.toSet === expect)
-  }
-
   test("dwithinDegJoin == brute-force planar distance oracle") {
     val ctrs = WebPages.nationCenters(spark, sfDir)
     val cs = ctrs.select("n_nationkey", "clon", "clat").collect()

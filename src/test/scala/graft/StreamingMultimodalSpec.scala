@@ -1,8 +1,11 @@
 package graft
 
-import graft.ops.Multimodal
+import graft.ops.{Multimodal, SpatialJoin}
 import graft.streaming.LiveView
 import graft.streaming.LiveView.{FeatureEvent, LiveFeature}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
@@ -109,21 +112,44 @@ class StreamingMultimodalSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt_ss").toString
     StreamingMultimodalSpec.sink.clear()
-    val polys = Seq((1L, -10.0, -10.0, 10.0, 10.0), (2L, 100.0, 40.0, 120.0, 60.0))
+    // two small boxes cover at a fine ladder level, the world box at a
+    // coarse one: the stream's ladder must match both
+    val polys = Seq((1L, -10.0, -10.0, 10.0, 10.0), (2L, 100.0, 40.0, 120.0, 60.0), (3L, -180.0, -90.0, 180.0, 90.0))
       .toDF("region_id", "x0", "y0", "x1", "y1")
       .withColumn("region_geom", graft.functions.st.makeBox(col("x0"), col("y0"), col("x1"), col("y1")))
       .select("region_id", "region_geom")
+    val coverLevels = polys.select(graft.functions.st.cellCoverLevel(col("region_geom"),
+      lit(SpatialJoin.DefaultBudget), typedLit(SpatialJoin.DefaultLevels))).distinct().count()
+    assert(coverLevels >= 2, s"covers at $coverLevels level(s)")
+    val batches = Seq(
+      Seq(FeatureEvent("in1", 0.0, 0.0, 1L, "upsert"),      // regions 1, 3
+        FeatureEvent("in2", 110.0, 50.0, 2L, "upsert"),      // regions 2, 3
+        FeatureEvent("out", -50.0, -50.0, 3L, "upsert")),    // region 3
+      Seq(FeatureEvent("in3", 9.5, -9.5, 4L, "upsert"),      // regions 1, 3
+        FeatureEvent("in4", 119.9, 59.9, 5L, "upsert"),      // regions 2, 3
+        FeatureEvent("pole", -179.5, 89.5, 6L, "upsert"),    // region 3
+        FeatureEvent("edge", 10.0, 0.0, 7L, "upsert")))      // region 3: on box 1's boundary
     val input = MemoryStream[FeatureEvent]
-    val joined = LiveView.streamPointsInPolygons(
+    def joined = LiveView.streamPointsInPolygons(
         input.toDS().toDF(), "lon", "lat", polys, "region_geom")
       .select("id", "region_id")
-    input.addData(
-      FeatureEvent("in1", 0.0, 0.0, 1L, "upsert"),     // region 1
-      FeatureEvent("in2", 110.0, 50.0, 2L, "upsert"),  // region 2
-      FeatureEvent("out", -50.0, -50.0, 3L, "upsert")) // no region
-    drain(ckpt, joined)
-    val got = collected.map(r => (r.getString(0), r.getLong(1))).toSet
-    assert(got === Set(("in1", 1L), ("in2", 2L)))
+    batches.foreach { b => input.addData(b); drain(ckpt, joined) } // one micro-batch each
+    val got = collected.map(r => (r.getString(0), r.getLong(1)))
+    val points = batches.flatten.toDF().withColumn("geom", graft.functions.st.point(col("lon"), col("lat")))
+    val expect = SpatialJoin.containsJoin(polys, "region_geom", points, "geom")
+      .select("id", "region_id").collect().map(r => (r.getString(0), r.getLong(1))).toSet
+    assert(got.size === got.toSet.size, "duplicate pairs emitted")
+    assert(got.toSet === expect)
+    assert(expect.map(_._2) === Set(1L, 2L, 3L) && expect.size === 11)
+    // the batch form of the same join: the polygon covers are broadcast
+    // and no exchange shuffles the point side
+    val plan = LiveView.streamPointsInPolygons(points, "lon", "lat", polys, "region_geom")
+      .queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.inputPlan
+        case p => p
+      }
+    assert(plan.collect { case e: ShuffleExchangeExec => e }.isEmpty, plan.toString)
+    assert(plan.collect { case j: BroadcastHashJoinExec => j }.nonEmpty, plan.toString)
   }
 
   test("multimodal: REAL image decode/resize/luma-histogram via JDK imageio") {
