@@ -14,6 +14,7 @@ import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, Bound
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, MapType, StructField, StructType}
 import org.json4s._
 import org.json4s.jackson.JsonMethods
@@ -47,12 +48,14 @@ import org.json4s.jackson.JsonMethods
  * by bucket, salt and the FULL cell key, so parquet row-group min/max stats
  * prune within a bucket the way sorted Accumulo tablets do.
  *
- * Resumability (north rule): the write runs in WAVES of buckets; each
- * completed wave appends its buckets to the manifest atomically
- * (write-temp + rename). A killed job resumes by re-running only the
- * buckets missing from the manifest — inputs are re-read but completed
- * output buckets are never rewritten. A resume whose frame's schema differs
- * from the recorded one is refused before any wave runs.
+ * Resumability (north rule): the write runs in WAVES of buckets, one for
+ * a small input and up to 4 by its size estimate; a bucket's wave is a hash
+ * of its id. Each wave that wrote buckets appends them to the manifest
+ * atomically (write-temp + rename). A resume first deletes un-manifested
+ * bucket dirs, then writes only the rows of buckets missing from the
+ * manifest — inputs are re-read, committed buckets never rewritten. A
+ * resume whose frame's schema differs from the recorded one is refused
+ * before any wave runs.
  */
 object CellLayout {
 
@@ -213,67 +216,62 @@ object CellLayout {
   }
 
   /**
-   * Checkpointed cell-partitioned write. Returns the manifest. `maxWaves`
-   * bounds how many waves run in THIS invocation (test hook for kill/resume;
-   * production leaves it at Int.MaxValue). A wave's manifest rows are the
-   * record counts in the footers of the parquet files it just wrote, read
-   * with the session's Hadoop conf: the output is never scanned back.
+   * Checkpointed cell-partitioned write. Returns the manifest. Its shape
+   * comes from the frame's optimizer size estimate (no job): `waves = 0`
+   * takes the fewest waves, at most 4, of which each fills one round of
+   * advisory-size tasks (`spark.sql.adaptive.advisoryPartitionSizeInBytes`)
+   * on every core; a wave shuffles into one task per advisory size of its
+   * share, at most `spark.sql.shuffle.partitions`. An unknown size (a leaf
+   * at `spark.sql.defaultSizeInBytes`) takes 4 waves and AQE's task counts.
+   * A bucket's wave is a hash of its id: no job discovers the buckets.
+   * `maxWaves` bounds how many waves commit in THIS invocation (test hook
+   * for kill/resume). A null `bucket` fails the wave's own write job.
    */
   def write(df: DataFrame, outDir: String, inputPath: String,
-            waves: Int = 4, maxWaves: Int = Int.MaxValue): Map[Long, BucketMeta] = {
-    val hadoopConf = df.sparkSession.sessionState.newHadoopConf()
-    require(Seq("cell", "bucket", "salt").forall(df.columns.contains),
-      "call withCellKeys first")
+            waves: Int = 0, maxWaves: Int = Int.MaxValue): Map[Long, BucketMeta] = {
+    require(waves >= 0, s"waves must be >= 0 (0 derives it from the input size), got $waves")
+    require(Seq("cell", "bucket", "salt").forall(df.columns.contains), "call withCellKeys first")
+    val spark = df.sparkSession
+    val hadoopConf = spark.sessionState.newHadoopConf()
     val schema = readSchema(df.schema)
     val prior = loadManifest(outDir, None)
     prior.foreach(m => requireSameSchema(outDir, m.schema, schema))
-
-    val done = prior.fold(Map.empty[Long, BucketMeta])(_.buckets)
-    val allBuckets = df.select("bucket").distinct().collect().map(_.getLong(0)).sorted
-    val pending = allBuckets.filterNot(done.contains)
-    if (pending.isEmpty) return done
-
-    val waveOf = pending.zipWithIndex.map { case (b, i) => b -> i % waves }.toMap
-    val waveIds = waveOf.values.toSeq.distinct.sorted.take(maxWaves)
+    var manifest = prior.fold(Map.empty[Long, BucketMeta])(_.buckets)
+    // crash-window cleanup (idempotent resume): a run killed between a
+    // parquet append and its checkpoint left bucket dirs that re-writing
+    // would duplicate; no wave writes a manifested bucket, so all others go
+    deleteBucketDirs(outDir, keep = manifest.keySet)
+    val conf = spark.sessionState.conf
+    val plan = df.queryExecution.optimizedPlan
+    val size = Some(plan.stats.sizeInBytes)
+      .filterNot(_ => plan.collectLeaves().exists(_.stats.sizeInBytes >= conf.defaultSizeInBytes))
+    val advisory = BigInt(conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
+    def ceilClamp(bytes: BigInt, per: BigInt, hi: Int): Int = ((bytes + per - 1) / per).max(1).min(hi).toInt
+    val n = if (waves > 0) waves else size.fold(4)(ceilClamp(_, advisory * spark.sparkContext.defaultParallelism, 4))
+    val tasks = size.map(s => ceilClamp(s, advisory * n, conf.numShufflePartitions))
+    val keyed = df.withColumn("bucket", when(col("bucket").isNull, raise_error(lit(
+      "CellLayout.write: null `bucket` — withCellKeys received a null lon/lat"))).otherwise(col("bucket")))
     val root = Paths.get(outDir)
-
-    var manifest = done
-    waveIds.foreach { w =>
-      val bs = waveOf.collect { case (b, `w`) => b }.toSeq
-      // crash-window cleanup (idempotent resume): a prior run killed AFTER
-      // the parquet append but BEFORE the manifest checkpoint left these
-      // buckets on disk without a manifest entry — re-running would append
-      // a second copy (silent duplicates). Any bucket dir pending in this
-      // wave is, by definition, not in the manifest: delete before writing.
-      deleteBucketDirs(outDir, bs)
+    val bucketDir = "bucket=(\\d+)/".r
+    val waveOf = if (n > 1) pmod(hash(col("bucket")), lit(n)) else lit(0) // one wave: no filter
+    var committed = 0
+    Iterator.range(0, n).takeWhile(_ => committed < maxWaves).foreach { w =>
+      // wave w: its buckets' rows that the manifest lacks
+      val pending = keyed.filter(waveOf === w && !col("bucket").isin(manifest.keys.toSeq: _*))
       val t0 = System.nanoTime()
-      val wave = df.filter(col("bucket").isin(bs: _*))
-        // hash-partition on (bucket, salt): a hot bucket spreads over
-        // `salts` tasks with no sampling job (AQE still coalesces the
-        // partitions); the sort gives row-group min/max locality on `cell`
-        .repartition(col("bucket"), col("salt"))
+      // hash-partition on (bucket, salt): a hot bucket spreads over `salts`
+      // tasks; the sort gives row-group min/max locality on `cell`
+      tasks.fold(pending.repartition(col("bucket"), col("salt")))(pending.repartition(_, col("bucket"), col("salt")))
         .sortWithinPartitions("bucket", "salt", "cell")
-      wave.write.mode("append").partitionBy(partitionColumns(df.columns.toSeq): _*).parquet(outDir)
+        .write.mode("append").partitionBy(partitionColumns(df.columns.toSeq): _*).parquet(outDir)
       val wallMs = (System.nanoTime() - t0) / 1000000
-
-      // per-bucket files and metrics from the written files (lineage:
-      // input → bucket). ONE walk per wave (bucket dirs may nest under
-      // day=… partitions): group the parquet files by their bucket dir — a
-      // per-bucket walk would be O(buckets × files) driver-side at cluster
-      // bucket counts
-      val byBucket: Map[Long, Array[java.nio.file.Path]] = {
-        val walk = Files.walk(root)
-        val files = try walk.toArray.map(_.asInstanceOf[java.nio.file.Path])
-          .filter(_.getFileName.toString.endsWith(".parquet"))
-        finally walk.close()
-        val pat = java.util.regex.Pattern.compile("bucket=(\\d+)/")
-        files.flatMap { f =>
-          val m = pat.matcher(f.toString)
-          if (m.find()) Some(m.group(1).toLong -> f) else None
-        }.groupBy(_._1).map { case (b, fs) => b -> fs.map(_._2).sortBy(_.toString) }
-      }
-      bs.foreach { b =>
-        val files = byBucket.getOrElse(b, Array.empty)
+      // this wave's buckets are the un-manifested bucket dirs on disk (ONE
+      // walk; they may nest under day=…), their rows the record counts in
+      // their parquet footers (lineage: input → bucket): no scan of the output
+      val fresh = tree(root).filter(_.getFileName.toString.endsWith(".parquet"))
+        .flatMap(f => bucketDir.findFirstMatchIn(f.toString).map(_.group(1).toLong -> f))
+        .groupBy(_._1).collect { case (b, fs) if !manifest.contains(b) => b -> fs.map(_._2).sortBy(_.toString) }
+      fresh.foreach { case (b, files) =>
         val dataFiles = files.map(f => DataFile(root.relativize(f).toString, Files.size(f))).toSeq
         val rows = files.map { f =>
           val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f.toString), hadoopConf))
@@ -281,28 +279,30 @@ object CellLayout {
         }.sum
         manifest += b -> BucketMeta(b, rows, dataFiles.map(_.bytes).sum, w, inputPath, wallMs, dataFiles)
       }
-      writeManifest(outDir, Manifest(schema, manifest)) // atomic checkpoint after each wave
+      if (fresh.nonEmpty) { // atomic checkpoint after each wave that wrote buckets
+        writeManifest(outDir, Manifest(schema, manifest))
+        committed += 1
+      }
     }
     manifest
   }
 
-  /** Delete every `bucket=<b>` partition dir (possibly nested under day=…)
-    * for the given buckets — the resume-time cleanup of un-manifested
-    * output. */
-  private def deleteBucketDirs(outDir: String, buckets: Seq[Long]): Unit = {
+  /** Delete every `bucket=` partition dir (possibly nested under day=…)
+    * whose bucket is not in `keep` — the resume-time cleanup of
+    * un-manifested output. */
+  private def deleteBucketDirs(outDir: String, keep: Set[Long]): Unit = {
     val root = Paths.get(outDir)
-    if (!Files.exists(root)) return
-    val names = buckets.map(b => s"bucket=$b").toSet
-    val walk = Files.walk(root)
-    val dirs = try walk.toArray.map(_.asInstanceOf[java.nio.file.Path])
-      .filter(p => Files.isDirectory(p) && names.contains(p.getFileName.toString))
-    finally walk.close()
-    dirs.foreach { d =>
-      val all = Files.walk(d)
-      try all.toArray.map(_.asInstanceOf[java.nio.file.Path])
-        .sortBy(-_.getNameCount).foreach(Files.deleteIfExists(_))
-      finally all.close()
-    }
+    val kept = keep.map(b => s"bucket=$b")
+    if (Files.exists(root)) tree(root).filter { p =>
+      val name = p.getFileName.toString
+      Files.isDirectory(p) && name.startsWith("bucket=") && !kept.contains(name)
+    }.foreach(d => tree(d).sortBy(-_.getNameCount).foreach(Files.deleteIfExists(_)))
+  }
+
+  /** Every path under `p`, `p` included. */
+  private def tree(p: java.nio.file.Path): Array[java.nio.file.Path] = {
+    val walk = Files.walk(p)
+    try walk.toArray.map(_.asInstanceOf[java.nio.file.Path]) finally walk.close()
   }
 
   /** Read a cell table back from its manifest: the scan gets the recorded

@@ -79,7 +79,8 @@ object Density {
    *  aggregate max-per-pixel inside W×H tiles, then pack each tile into a
    *  row-major byte buffer Dataset[(tile_x, tile_y, bytes)]. Values are
    *  min-max normalized to 0..255 per tile (the reference normalizes into
-   *  the byte range the same way). */
+   *  the byte range the same way). Null values are skipped, as `max` skips
+   *  them: a pixel or tile with no non-null value is not drawn. */
   def tiles(df: DataFrame, lon: Column, lat: Column, value: Column,
             tileDeg: Double, w: Int, h: Int): DataFrame = {
     import org.apache.spark.sql.Row
@@ -89,7 +90,7 @@ object Density {
     val px = floor(((lon + 180.0) / tileDeg - floor((lon + 180.0) / tileDeg)) * w).cast("int")
     val py = floor(((lat + 90.0) / tileDeg - floor((lat + 90.0) / tileDeg)) * h).cast("int")
     val perPixel = df
-      .filter(lon >= -180.0 && lon < 180.0 && lat >= -90.0 && lat < 90.0)
+      .filter(lon >= -180.0 && lon < 180.0 && lat >= -90.0 && lat < 90.0 && value.isNotNull)
       .groupBy(tx.as("tile_x"), ty.as("tile_y"), px.as("px"), py.as("py"))
       .agg(max(value).as("v"))
     val packed = perPixel

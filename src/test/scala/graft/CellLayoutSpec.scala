@@ -201,8 +201,8 @@ class CellLayoutSpec extends SparkSpec {
     val vsPartial = CellLayout.snapshotVersions(out)
     assert(vsPartial === Seq(1, 2))
     CellLayout.write(keyedPages, out, sfDir, waves = 4) // resume to completion
-    // the resume re-splits pending buckets into its own waves, so history
-    // keeps growing: contiguous versions, one per completed wave
+    // the resume commits the waves the first invocation did not reach, so
+    // history keeps growing: contiguous versions, one per completed wave
     val vs = CellLayout.snapshotVersions(out)
     assert(vs === (1 to vs.max))
     assert(vs.size > 2)
@@ -254,5 +254,63 @@ class CellLayoutSpec extends SparkSpec {
       .map(t => String.valueOf(t.getMessage)).toSeq
     val name = gone.substring(gone.lastIndexOf('/') + 1)
     assert(messages.exists(_.contains(name)), messages.mkString("\n"))
+  }
+
+  // ---- write sizing: waves from the input's size estimate, hashed bucket waves ----
+
+  private def waveTags(m: Map[Long, CellLayout.BucketMeta]) = m.values.map(_.wave).toSet
+
+  test("a frame of unknown size (built from an RDD) still writes 4 waves") {
+    val out = freshDir()
+    val unknown = spark.createDataFrame(keyedPages.rdd, keyedPages.schema)
+    val manifest = CellLayout.write(unknown, out, sfDir)
+    assert(CellLayout.snapshotVersions(out) === (1 to 4))
+    assert(waveTags(manifest) === Set(0, 1, 2, 3))
+    assert(manifest.values.map(_.rows).sum === keyedPages.count())
+  }
+
+  test("an explicit waves = 4 writes 4 waves: the hash spreads Z2 bucket ids at res 2, 3 and 6 over all") {
+    // Z2 ids carry their resolution in the low 5 bits: `bucket % waves`
+    // would put every bucket of one resolution in a single wave
+    for (res <- Seq(2, 3, 6)) {
+      val out = freshDir()
+      val keyed = CellLayout.withCellKeys(WebPages.pages(spark, sfDir).select("doc_id", "lon", "lat"),
+        col("lon"), col("lat"), col("doc_id"), bucketRes = res)
+      val manifest = CellLayout.write(keyed, out, sfDir, waves = 4)
+      assert(manifest.keys.forall(graft.index.Z2.resOf(_) == res))
+      assert(waveTags(manifest) === Set(0, 1, 2, 3), s"res $res")
+      assert(CellLayout.snapshotVersions(out) === (1 to 4), s"res $res")
+    }
+  }
+
+  test("an un-manifested bucket dir of a later wave is deleted before the first wave") {
+    val tags = CellLayout.write(keyedPages, freshDir(), sfDir, waves = 4).map { case (b, m) => b -> m.wave }
+    val out = freshDir()
+    val partial = CellLayout.write(keyedPages, out, sfDir, waves = 4, maxWaves = 1)
+    val last = tags.values.max
+    val crashed = tags.collect { case (b, `last`) => b }.head
+    assert(!partial.contains(crashed) && partial.values.forall(_.wave < last))
+    keyedPages.filter(col("bucket") === crashed)
+      .write.mode("append").partitionBy("bucket").parquet(out)
+    val dir = java.nio.file.Paths.get(out, s"bucket=$crashed")
+    assert(java.nio.file.Files.exists(dir))
+    // this invocation commits one more wave, not the crashed bucket's
+    val more = CellLayout.write(keyedPages, out, sfDir, waves = 4, maxWaves = 1)
+    assert(more.size > partial.size && !more.contains(crashed))
+    assert(!java.nio.file.Files.exists(dir), "the un-manifested dir must go before the first wave")
+    val full = CellLayout.write(keyedPages, out, sfDir, waves = 4)
+    assert(full(crashed).rows === keyedPages.filter(col("bucket") === crashed).count())
+    assert(CellLayout.read(spark, out).count() === keyedPages.count())
+  }
+
+  test("rerunning the write on a complete table adds no snapshot and returns the same manifest") {
+    val out = freshDir()
+    val full = CellLayout.write(keyedPages, out, sfDir, waves = 4)
+    val versions = CellLayout.snapshotVersions(out)
+    Seq(0, 4).foreach { waves =>
+      val again = CellLayout.write(keyedPages, out, sfDir, waves = waves)
+      assert(again === full)
+      assert(CellLayout.snapshotVersions(out) === versions)
+    }
   }
 }

@@ -166,6 +166,19 @@ class KnnMetaSpec extends SparkSpec {
     assert((buf(4 * 8 + 4) & 0xff) > 0)
     // the max-valued pixel gets the top of the byte range
     assert(buf.map(_ & 0xff).max === 255)
+
+    // null values are skipped as max skips them: a pixel whose only value
+    // is null stays 0, and a tile with no non-null value is not emitted
+    val withNulls = Seq[(Double, Double, Option[Double])](
+      (10.5, 10.5, Some(1.0)), (10.5, 10.6, Some(5.0)), (15.5, 15.5, Some(3.0)),
+      (10.5, 10.6, None),       // null beside 5.0 in pixel (0,0)
+      (12.8, 12.8, None),       // tile (19,10), pixel (2,2): only a null
+      (35.5, 35.5, None), (36.5, 36.5, None)) // tile (21,12): only nulls
+      .toDF("lon", "lat", "v")
+    val nullTiles = Density.tiles(withNulls, $"lon", $"lat", $"v", tileDeg = 10.0, w = 8, h = 8)
+      .collect().map(r => ((r.getInt(0), r.getInt(1)), r.getAs[Array[Byte]](2))).toMap
+    assert(nullTiles.keySet === Set((19, 10)))
+    assert(nullTiles((19, 10)).toSeq === buf.toSeq)
   }
 
   test("spec string -> StructType -> spec string round-trip with metadata") {

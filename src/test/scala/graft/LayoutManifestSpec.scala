@@ -103,15 +103,17 @@ class LayoutManifestSpec extends SparkSpec {
   }
 
   /** Jobs started while `body` runs, up to a sentinel job run after it
-    * (listener events arrive in order). */
-  private def jobsDuring[T](body: => T): (T, Seq[Int]) = {
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Integer]()
+    * (listener events arrive in order), each with the SQL execution that
+    * started it ("" for none). */
+  private def jobsDuring[T](body: => T): (T, Seq[(Int, String)]) = {
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String)]()
     val sentinel = new java.util.concurrent.CountDownLatch(1)
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (Option(e.properties).exists(p => p.getProperty("spark.job.description") == "__sentinel"))
           sentinel.countDown()
-        else if (sentinel.getCount > 0) jobs.add(e.jobId)
+        else if (sentinel.getCount > 0) jobs.add(e.jobId ->
+          Option(e.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id"))).getOrElse(""))
     }
     spark.sparkContext.addSparkListener(listener)
     try {
@@ -120,7 +122,7 @@ class LayoutManifestSpec extends SparkSpec {
       try spark.sparkContext.parallelize(Seq(1), 1).count()
       finally spark.sparkContext.setJobDescription(null)
       assert(sentinel.await(30, java.util.concurrent.TimeUnit.SECONDS), "listener never saw the sentinel")
-      (result, jobs.toArray.map(_.asInstanceOf[Integer].intValue).toSeq)
+      (result, jobs.toArray.map(_.asInstanceOf[(Int, String)]).toSeq)
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
@@ -184,5 +186,33 @@ class LayoutManifestSpec extends SparkSpec {
     }
     // the same schema still resumes
     assert(CellLayout.write(keyed, out, sfDir, waves = 4).size > partial.size)
+  }
+
+  test("a small input of known size writes in one wave's jobs: no discovery job, one snapshot") {
+    val out = freshDir()
+    val keyed = CellLayout.withCellKeys(pages, col("lon"), col("lat"), col("doc_id"))
+    val (manifest, jobs) = jobsDuring(CellLayout.write(keyed, out, sfDir))
+    assert(jobs.nonEmpty)
+    // the wave's shuffle-map job and its write job belong to the one write
+    // query; a bucket-discovery `collect` would be another execution
+    assert(jobs.map(_._2).distinct.size === 1 && jobs.head._2.nonEmpty, s"jobs $jobs")
+    assert(CellLayout.snapshotVersions(out) === Seq(1))
+    assert(manifest.values.forall(_.wave == 0))
+    assertRowsMatchScan(out, manifest)
+  }
+
+  test("a null lon fails the write inside its wave job, naming `bucket`; nothing is committed") {
+    val out = freshDir()
+    val first = pages.select(min("doc_id")).head().getLong(0)
+    val holed = pages.withColumn("lon", when(col("doc_id") === first, lit(null)).otherwise(col("lon")))
+    val keyed = CellLayout.withCellKeys(holed, col("lon"), col("lat"), col("doc_id"))
+    val (e, jobs) = jobsDuring(intercept[Exception](CellLayout.write(keyed, out, sfDir)))
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).toSeq
+    assert(messages.exists(m => m.contains("`bucket`") && m.contains("withCellKeys received a null lon/lat")),
+      messages.mkString("\n"))
+    assert(jobs.map(_._2).distinct.size === 1, s"the failure must come from the wave's own jobs: $jobs")
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(out, "_graft_manifest.json")))
+    assert(CellLayout.snapshotVersions(out).isEmpty)
   }
 }
